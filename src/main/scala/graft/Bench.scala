@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark: times every registered query at the bench scale
   * factor. The FULL per-query JSON goes to `BENCH_full.json` (committed
@@ -102,44 +102,69 @@ object Bench {
     */
   private val FloorSec = 1.0
 
+  /** The noop-sink write every warm-up, measured run and retry goes
+    * through (see the object scaladoc for why not count()).
+    */
+  def exhaust(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
+
+  /** JIT/classload warmup runs at the smallest scale factor (standard
+    * bench methodology): one-time costs — MLlib class loading, codegen
+    * compilation, UDAF encoders — land there, and the measured pass times
+    * steady-state execution at the bench SF. Falls back to the bench dir
+    * (a slower but valid warmup) when the small SF is absent; a no-op
+    * warmup would skew the first measured queries with classload costs.
+    */
+  def warmDir(sfDir: String): String =
+    if (new java.io.File("/root/testdata/sf0.001").isDirectory) "/root/testdata/sf0.001"
+    else sfDir
+
+  /** One unmeasured warmup run. A failure is reported, not swallowed —
+    * a query that cannot warm up leaves its one-time costs to the
+    * measured pass — and its name is returned for `warmup_failed`.
+    */
+  def warmup(spark: SparkSession, name: String)(body: => Unit): Option[String] = {
+    val failed =
+      try { body; None }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}"); Some(name)
+      }
+    spark.catalog.clearCache()
+    failed
+  }
+
+  /** One measured run: its wall-clock seconds, or None (reported on
+    * stderr) when `body` throws. Afterwards, outside the timing, drop
+    * per-query caches (LSH signatures etc.) so accumulated blocks don't
+    * pressure the heap of later queries. clearCache only covers
+    * cache()/persist() — localCheckpoint blocks are freed by the
+    * ContextCleaner, which only fires on a JVM GC, so force one: without
+    * it dead checkpoint RDDs from 150 queries pile up in the shared
+    * local-mode heap and tax later queries (measured 4-5× inflation on
+    * queries late in a heavy sequence).
+    */
+  def timed(spark: SparkSession, label: String)(body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    val dt =
+      try { body; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $label failed: ${e.getMessage}"); None
+      }
+    spark.catalog.clearCache()
+    System.gc()
+    dt
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the bounded-heap UDAF aggregates (top-M adjacency, top-k
-      // search) in HASH mode: the default 128-distinct-key fallback
-      // degrades every group-heavy ObjectHashAggregate into a full sort
-      // of its input — measured 76s (spilling sort of a 101M-row pair
-      // stream) vs hash-mode minutes->seconds at the sf1 K=20 decade.
-      // Heap buffers are M-bounded (~500B), so 1M keys/partition is MBs
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { t =>
-      // events needs its ns-timestamp-aware loader; plain reads reject it
-      try (if (t == "events") Tables.events(spark, sfDir) else Tables(spark, sfDir, t)).count()
-      catch { case _: Throwable => () }
-    }
-    // JIT/classload warmup at the smallest scale factor (standard bench
-    // methodology): every query runs once on sf0.001 so one-time costs —
-    // MLlib class loading, codegen compilation, UDAF encoders — land here,
-    // and the measured pass times steady-state execution at the bench SF.
-    // Falls back to the bench dir (a slower but valid warmup) when the
-    // small SF is absent; a silent no-op warmup would skew the first
-    // measured queries with classload costs.
-    val warmDir =
-      if (new java.io.File("/root/testdata/sf0.001").isDirectory) "/root/testdata/sf0.001"
-      else sfDir
-    def exhaust(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try { exhaust(fn(spark, warmDir)) } catch { case _: Throwable => () }
-      spark.catalog.clearCache()
+    val spark = GraftSession.local(GraftSession.cpus)
+    val smallDir = warmDir(sfDir)
+    // events needs its ns-timestamp-aware loader; plain reads reject it
+    val warmupFailed = Tables.names.flatMap { t =>
+      warmup(spark, t) {
+        (if (t == "events") Tables.events(spark, sfDir) else Tables(spark, sfDir, t)).count(): Unit
+      }
+    } ++ SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      warmup(spark, name)(exhaust(fn(spark, smallDir)))
     }
     // free the warmup pass's dead localCheckpoint blocks before measuring;
     // the trained-artifact memos are CLEARED first — they would otherwise
@@ -149,49 +174,26 @@ object Bench {
     System.gc()
     val (stealBefore, totalBefore) = stealJiffies()
     // explicit ARTIFACT PHASE (inside the measured/steal window): train
-    // the shared session artifacts (three tokenizer families + the
-    // near-dup pair graph) for the bench SF and
-    // record each trainer's own wall-clock. The suite is staged — family
-    // queries ride these artifacts, so their per-query numbers are
-    // marginal cost — and this is where trainer cost lives: a trainer
-    // regression is a tracked number here, not a hidden component of
-    // whichever family query sorts first, and the >1.5× retry below stays
-    // work-equivalent for family queries (memo state at retry == memo
-    // state when measured). Failure honesty (the module contract): a
-    // trainer that throws reports -1 here and the family queries then
-    // fail-and-report individually in the query loop — one broken trainer
-    // must not abort the other ~170 measurements or the output line.
-    val artifactTimes: Seq[(String, Double)] =
-      try SparkEntry.trainArtifacts(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] artifact training failed: ${e.getMessage}")
-        Seq("artifact_unigram_train" -> -1.0, "artifact_bpe_train" -> -1.0,
-          "artifact_wordpiece_train" -> -1.0, "artifact_neardup_pairs" -> -1.0,
-          "artifact_bm25_index" -> -1.0, "artifact_hnsw_index" -> -1.0)
-      }
+    // the shared session artifacts for the bench SF and record each
+    // trainer's own wall-clock. The suite is staged — family queries ride
+    // these artifacts, so their per-query numbers are marginal cost — and
+    // this is where trainer cost lives: a trainer regression is a tracked
+    // number here, not a hidden component of whichever family query sorts
+    // first, and the >1.5× retry below stays work-equivalent for family
+    // queries (memo state at retry == memo state when measured). A
+    // trainer that throws reports -1 (trainArtifacts isolates each
+    // entry) and its family queries then fail-and-report individually in
+    // the query loop.
+    val artifactTimes = SparkEntry.trainArtifacts(spark, sfDir)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { exhaust(fn(spark, sfDir)); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop per-query caches (LSH signatures etc.) so accumulated blocks
-      // don't pressure the heap of later queries; not part of the timing.
-      // clearCache only covers cache()/persist() — localCheckpoint blocks
-      // are freed by the ContextCleaner, which only fires on a JVM GC, so
-      // force one: without it dead checkpoint RDDs from 150 queries pile
-      // up in the shared local-mode heap and tax later queries (measured
-      // 4-5× inflation on queries late in a heavy sequence)
-      spark.catalog.clearCache()
-      System.gc()
-      (name, if (ok) dt else -1.0, ok)
+      val dt = timed(spark, name)(exhaust(fn(spark, sfDir)))
+      (name, dt.getOrElse(-1.0), dt.isDefined)
     }
     val qs = results.map { case (k, v, _) => JsonOut.q(k) + ":" + v }
       .mkString("{", ",", "}")
     val failed = results.collect { case (k, _, false) => JsonOut.q(k) }
       .mkString("[", ",", "]")
+    val warmupFailedJson = warmupFailed.map(JsonOut.q).mkString("[", ",", "]")
     // total = artifact phase + query phase: the suite's real wall-clock
     // (per-query values stay marginal-cost; "artifacts" decomposes).
     // Failed trainers carry -1 in the map and contribute NOTHING here —
@@ -243,15 +245,8 @@ object Bench {
         // 5.2s) reads true from the artifact alone, with no judge re-run
         val retried = (if (reliable) ratios.filter(_._2 > 1.5).toSeq else Seq.empty)
           .map { case (name, r) =>
-            val t0 = System.nanoTime()
-            val ok = try { exhaust(SparkEntry.queries(name)(spark, sfDir)); true }
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] retry of $name failed: ${e.getMessage}"); false
-              }
-            val dt = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            System.gc()
-            (name, if (ok) dt else -1.0, if (ok) math.min(r, dt / bq(name)) else r)
+            val dt = timed(spark, s"retry of $name")(exhaust(SparkEntry.queries(name)(spark, sfDir)))
+            (name, dt.getOrElse(-1.0), dt.fold(r)(d => math.min(r, d / bq(name))))
           }
         // the artifact phase adjudicates the same way, with a retry that
         // clears the memos and re-trains — work-equivalent to the
@@ -309,7 +304,8 @@ object Bench {
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""artifacts":$artifactsJson,"artifact_total":$artifactTotal,""" +
-        s""""failed":$failed,"sf":${JsonOut.q(sfDir)},""" +
+        s""""failed":$failed,"warmup_failed":$warmupFailedJson,""" +
+        s""""sf":${JsonOut.q(sfDir)},""" +
         s""""steal":{"before":$stealBefore,"after":$stealAfter,""" +
         s""""delta":$stealDelta,"jiffies_delta":$jiffiesDelta,""" +
         s""""steal_pct":$stealPct},""" +

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.{CharEntropyStats, DotProduct, L2SquaredFp, MinHashSignature, NGramHashes, SimHash64, TopCount, WinnowFingerprints}
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * functions for SQL use. Wire with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * functions for SQL use. Wire with the builder's
+  * `withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`; for an already-running
   * session use [[GraftExtensions.registerAll]].
   */

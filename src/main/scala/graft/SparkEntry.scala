@@ -2440,9 +2440,16 @@ object SparkEntry {
       round(TextOps.qualityExpr(col("text")) * lit(1.0e6)).cast("long").as("quality_fp"),
       size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
 
+  /** The frontier's fixed x-geometry: 32 buckets over [0, 1e6) quality
+    * millionths — shared by the one-shot and keyed (incremental) forms,
+    * which must agree on it to share q_pareto_frontier's oracle.
+    */
+  private val (paretoXLo, paretoXHi, paretoBuckets) = (0L, 1000000L, 32)
+
   private def paretoOf(pts: DataFrame): DataFrame =
     SamplingOps.paretoFrontier2(
-      pts, "doc_id", "quality_fp", "n_tokens", xLo = 0L, xHi = 1000000L, nBuckets = 32)
+      pts, "doc_id", "quality_fp", "n_tokens",
+      xLo = paretoXLo, xHi = paretoXHi, nBuckets = paretoBuckets)
 
   /** Incremental maintenance of the curation frontier: the skyline is a
     * FOLD MONOID — skyline(A ∪ B) = skyline(skyline(A) ∪ skyline(B)),
@@ -2470,7 +2477,7 @@ object SparkEntry {
       .withColumn("__batch", pmod(col("doc_id"), lit(4)))
     val parts = SamplingOps.paretoFrontier2Keyed(
       pts, Seq("__batch"), "doc_id", "quality_fp", "n_tokens",
-      xLo = 0L, xHi = 1000000L, nBuckets = 32)
+      xLo = paretoXLo, xHi = paretoXHi, nBuckets = paretoBuckets)
       .drop("__batch")
     paretoOf(parts)
   }
@@ -2704,48 +2711,6 @@ object SparkEntry {
       bm25ScoredArtifact(spark, dir), k = 10)
   }
 
-  /** The SHARED BM25 index artifact (postings, doc lengths, df, corpus
-    * totals over the documents table), memoized per (session, corpus
-    * dir) — the [[unigramArtifact]] treatment for the retrieval family:
-    * q_bm25, q_retrieval_eval and q_hybrid_rrf's sparse leg all search
-    * the SAME corpus index, and an operating deployment maintains it
-    * once ([[TextOps.mergeBm25Stats]] is the fold). The incremental
-    * query keeps building its per-half stats self-contained — that
-    * build IS its subject matter (the fold losslessness proof).
-    * Relations are localCheckpoint-backed; results bit-identical, every
-    * oracle unchanged.
-    */
-  private val bm25Memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]()
-  private def bm25IndexArtifact(
-      spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
-    bm25Memo.computeIfAbsent((spark, dir), _ => {
-      val (tf, dl, dfreq, stats) =
-        TextOps.bm25Stats(Tables.documents(spark, dir), "doc_id", "text")
-      (tf.localCheckpoint(true), dl.localCheckpoint(true),
-        dfreq.localCheckpoint(true), stats.localCheckpoint(true))
-    })
-
-  /** The staged QUERY-INDEPENDENT scored posting relation
-    * ([[TextOps.bm25ScoredPostings]] over [[bm25IndexArtifact]],
-    * checkpointed) — the r11 verdict's q_retrieval_eval fix: the three
-    * default-parameter retrieval queries (q_bm25, q_retrieval_eval,
-    * q_hybrid_rrf's sparse leg) previously re-derived every per-posting
-    * weight per query, and that scoring projection's first execution was
-    * the query's unbounded-variance leg (4-24s across captures). Staged,
-    * each query's marginal plan is join + accumulate + heap top-k over a
-    * materialized 3-column relation; the scoring cost is paid once in
-    * the artifact phase where it is its own tracked number.
-    */
-  private val bm25ScoredMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def bm25ScoredArtifact(spark: SparkSession, dir: String): DataFrame =
-    bm25ScoredMemo.computeIfAbsent((spark, dir), _ => {
-      val (tf, dl, dfreq, stats) = bm25IndexArtifact(spark, dir)
-      TextOps.bm25ScoredPostings(tf, dl, dfreq, stats, "doc_id").localCheckpoint(true)
-    })
-
   /** Incremental BM25 index maintenance, proven lossless BY CONSTRUCTION:
     * even/odd corpus halves are indexed separately, folded with
     * [[TextOps.mergeBm25Stats]], and searching the merged index must
@@ -2815,23 +2780,6 @@ object SparkEntry {
       dim = 64, m = 8, kSub = 16, k = 5, nLists = 8, nProbe = 4, iters = 2, rerank = 8)
   }
 
-  /** The shared trained-BPE artifact, memoized per (session, corpus dir)
-    * — the [[unigramArtifact]] treatment for the OTHER tokenizer family:
-    * the 10-merge sequential trainer runs once and the merge table, the
-    * induced vocabulary, the corpus encoding and the tokenizer report's
-    * BPE leg all derive from the returned (merges, segmentation) pair.
-    * The segmentation is localCheckpoint-backed and the merge table is a
-    * driver-side list, so reuse replays no merge rounds; results are
-    * bit-identical to per-query training (deterministic trainer, same
-    * corpus), so every oracle is unchanged.
-    */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Long, String, String, Long)], DataFrame)]()
-  private def bpeTrainedArtifact(
-      spark: SparkSession, dir: String): (Seq[(Long, String, String, Long)], DataFrame) =
-    bpeMemo.computeIfAbsent((spark, dir),
-      _ => TextOps.bpeArtifact(Tables.documents(spark, dir), "text", nMerges = 10))
-
   /** Greedy BPE merge learning over the corpus vocabulary (10 merges) —
     * the subword-tokenizer training step. Fully deterministic (tie order
     * pinned), so the oracle replays all ten count→argmax→rewrite rounds
@@ -2875,20 +2823,6 @@ object SparkEntry {
       docs.filter(col("doc_id") % 2 === 0), "text", nMerges = 10)
     TextOps.bpeEncodeDocsWith(docs, "doc_id", "text", merges.map(m => (m._2, m._3)))
   }
-
-  /** The shared trained-WordPiece artifact, memoized per (session, corpus
-    * dir) — the [[bpeTrainedArtifact]] treatment for the THIRD tokenizer
-    * family: the 10-merge likelihood-scored trainer runs once and the
-    * merge table and corpus encoding both derive from the returned
-    * (merges, segmentation) pair.
-    */
-  private val wpMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Long, String, String, String, Long, Long)], DataFrame)]()
-  private def wordpieceTrainedArtifact(
-      spark: SparkSession,
-      dir: String): (Seq[(Long, String, String, String, Long, Long)], DataFrame) =
-    wpMemo.computeIfAbsent((spark, dir),
-      _ => TextOps.wordpieceArtifact(Tables.documents(spark, dir), "text", nMerges = 10))
 
   /** WordPiece merge learning (10 merges) — the LIKELIHOOD-scored member
     * of the subword-trainer family (BPE merges by raw pair count, unigram
@@ -3031,7 +2965,7 @@ object SparkEntry {
     val results = TextOps.bm25SearchFromScored(
       queries, "doc_id", "text", "doc_id", bm25ScoredArtifact(spark, dir), k = 10)
     // the relevance set = query-involving near-dup pairs, which are a
-    // FILTER of the staged session pair graph (artifact_neardup_pairs) —
+    // FILTER of the staged session pair graph (neardupArtifact) —
     // the same verified relation eleven other consumers ride, and exactly
     // what this query's oracle derives relevance from (the full `pr` CTE
     // restricted to result queries). Reading the artifact replaces the
@@ -3075,127 +3009,148 @@ object SparkEntry {
   def qDataCard(spark: SparkSession, dir: String): DataFrame =
     TextOps.dataCard(Tables.documents(spark, dir), "doc_id", "text", "source")
 
-  /** The SHARED trained-unigram artifact, memoized per (session, corpus
-    * dir) — the staged operating mode for the whole unigram family: the
-    * hard-EM trainer runs ONCE and every downstream product (vocab,
-    * segmentation, corpus encoding, the staged union) derives from the
-    * returned (vocab, segs) pair. Both relations are backed by the
-    * trainer's localCheckpoints, so reuse replays joins over materialized
-    * RDDs, never the EM — within one Verify/Bench session the suite pays
-    * the training once instead of once per registered query, which is
-    * exactly how a 100 TB deployment runs it (train, persist the
-    * artifact, fan out consumers). Results are bit-identical to
-    * per-query training (same deterministic trainer, same corpus), so
-    * every oracle is unchanged. The memo holds per-session DataFrames
-    * (keyed by session identity, so a restarted session retrains) and is
-    * vocabulary-bounded in memory.
+  /** A shared session artifact: trained at most once per (session,
+    * corpus dir) and memoized — the staged operating mode for a query
+    * family (train, persist the artifact, fan out consumers), which is
+    * how a deployment runs it. Every entry's relations are
+    * localCheckpoint-backed, so reuse replays joins over materialized
+    * RDDs, never the trainer; results are bit-identical to per-query
+    * training (deterministic trainers, same corpus), so every oracle is
+    * unchanged. The memo is keyed by session identity, so a restarted
+    * session retrains. Memoization, clearing and the artifact-phase
+    * timing all derive from the one [[artifacts]] list.
     */
-  private val unigramMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
-  private def unigramArtifact(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    unigramMemo.computeIfAbsent((spark, dir),
-      _ => TextOps.unigramTrain(Tables.documents(spark, dir), "text"))
-
-  /** Drop every memoized trained artifact (both tokenizer families).
-    * Harness hook: Bench clears after its warmup pass so the warmup-scale
-    * artifacts' localCheckpoint blocks become collectable (the memo would
-    * otherwise pin them through the measured run), then explicitly
-    * re-trains at the bench scale via [[trainArtifacts]].
-    */
-  def clearTrainedArtifacts(): Unit = {
-    unigramMemo.clear()
-    bpeMemo.clear()
-    wpMemo.clear()
-    neardupMemo.clear()
-    bm25Memo.clear()
-    bm25ScoredMemo.clear()
-    hnswMemo.clear()
+  private final class Artifact[A](val name: String, build: (SparkSession, String) => A) {
+    private val memo = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), A]()
+    def apply(spark: SparkSession, dir: String): A =
+      memo.computeIfAbsent((spark, dir), _ => build(spark, dir))
+    def clear(): Unit = memo.clear()
+    def memoized: Boolean = !memo.isEmpty
   }
 
-  /** The SHARED staged HNSW index (working relation + scored pair
-    * relation under the frozen fit, both checkpointed), memoized per
-    * (session, corpus dir) — the [[unigramArtifact]] treatment for the
-    * HNSW twins: q_ann_hnsw and q_ann_hnsw_incr ride ONE quantizer fit,
-    * corpus routing and pair scoring instead of recomputing them
-    * per query (13% of the r11 suite wall-clock), and the expensive leg
-    * moves to the bench's artifact phase where first-execution cost is
-    * its own tracked number. Results are bit-identical to the unstaged
-    * forms (same deterministic fit on the same corpus), so the shared
-    * oracle is unchanged and the incr query's hash-match remains the
-    * staged≡from-scratch proof.
+  /** The trained-unigram artifact for the whole unigram family: the
+    * hard-EM trainer runs ONCE and every downstream product (vocab,
+    * segmentation, corpus encoding, the staged union) derives from the
+    * returned (vocab, segs) pair. Vocabulary-bounded in memory.
     */
-  private val hnswMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
-  private def hnswIndexArtifact(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    hnswMemo.computeIfAbsent((spark, dir), _ =>
-      SimilarityOps.hnswStageIndex(
-        Tables.embeddings(spark, dir), "vec_id", "embedding",
-        nLists = 16, nProbe = 3, iters = 2))
+  private val unigramArtifact = new Artifact("artifact_unigram_train", (spark, dir) =>
+    TextOps.unigramTrain(Tables.documents(spark, dir), "text"))
 
-  /** The SHARED verified near-dup PAIR GRAPH (word-3-gram Jaccard ≥ 0.5
-    * over documents) and its connected-components labeling (every doc,
-    * singletons self-labeled), memoized per (session, corpus dir) — the
-    * [[unigramArtifact]] treatment for the dedup-graph family. NINE
-    * registered queries consume this one relation (clusters, keeper
-    * election, cluster split, label propagation, PageRank, triangles,
-    * split leakage, the curation chain and both manifests); staged, the
-    * suite pays the shingle join and the CC rounds once instead of once
-    * per query — exactly how a 100 TB deployment runs it (materialize
-    * the pair graph, fan out consumers). Both relations are
-    * localCheckpoint-backed (eager), results bit-identical to per-query
-    * derivation (deterministic operator, same corpus), so every oracle
-    * is unchanged.
+  /** The trained-BPE artifact: the 10-merge sequential trainer runs once
+    * and the merge table, the induced vocabulary, the corpus encoding
+    * and the tokenizer report's BPE leg all derive from the returned
+    * (merges, segmentation) pair. The merge table is a driver-side list,
+    * so reuse replays no merge rounds.
     */
-  private val neardupMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
+  private val bpeTrainedArtifact = new Artifact("artifact_bpe_train", (spark, dir) =>
+    TextOps.bpeArtifact(Tables.documents(spark, dir), "text", nMerges = 10))
+
+  /** The trained-WordPiece artifact, the [[bpeTrainedArtifact]]
+    * treatment for the THIRD tokenizer family: the merge table and
+    * corpus encoding both derive from the returned (merges,
+    * segmentation) pair.
+    */
+  private val wordpieceTrainedArtifact = new Artifact("artifact_wordpiece_train", (spark, dir) =>
+    TextOps.wordpieceArtifact(Tables.documents(spark, dir), "text", nMerges = 10))
+
+  /** The verified near-dup PAIR GRAPH (word-3-gram Jaccard ≥ 0.5 over
+    * documents) and its connected-components labeling (every doc,
+    * singletons self-labeled). NINE registered queries consume this one
+    * relation (clusters, keeper election, cluster split, label
+    * propagation, PageRank, triangles, split leakage, the curation chain
+    * and both manifests); staged, the suite pays the shingle join and
+    * the CC rounds once instead of once per query.
+    */
+  private val neardupArtifact = new Artifact("artifact_neardup_pairs", (spark, dir) => {
+    val docs = Tables.documents(spark, dir)
+    val pairs = DedupOps
+      .jaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.5)
+      .localCheckpoint(true)
+    val labels = docs.select(col("doc_id").as("id"))
+      .join(DedupOps.connectedComponents(pairs, "doc_a", "doc_b"), Seq("id"), "left")
+      .withColumn("cluster_id", coalesce(col("cluster_id"), col("id")))
+      .localCheckpoint(true)
+    (pairs, labels)
+  })
+
   private[graft] def neardupArtifactForTest(spark: SparkSession, dir: String): DataFrame =
     neardupArtifact(spark, dir)._1
 
-  private def neardupArtifact(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    neardupMemo.computeIfAbsent((spark, dir), _ => {
-      val docs = Tables.documents(spark, dir)
-      val pairs = DedupOps
-        .jaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.5)
-        .localCheckpoint(true)
-      val labels = docs.select(col("doc_id").as("id"))
-        .join(DedupOps.connectedComponents(pairs, "doc_a", "doc_b"), Seq("id"), "left")
-        .withColumn("cluster_id", coalesce(col("cluster_id"), col("id")))
-        .localCheckpoint(true)
-      (pairs, labels)
-    })
+  /** The BM25 index over the documents table (postings, doc lengths, df,
+    * corpus totals) and, over it, the QUERY-INDEPENDENT scored posting
+    * relation ([[TextOps.bm25ScoredPostings]]) — the one thing the
+    * retrieval family consumes: q_bm25, q_retrieval_eval and
+    * q_hybrid_rrf's sparse leg search the SAME corpus index, and an
+    * operating deployment maintains it once ([[TextOps.mergeBm25Stats]]
+    * is the fold). Unstaged, each query re-derived every per-posting
+    * weight, and that scoring projection's first execution was the
+    * query's unbounded-variance leg (4-24s across captures, the r11
+    * q_retrieval_eval finding). Staged, each query's marginal plan is
+    * join + accumulate + heap top-k over a materialized 3-column
+    * relation, and the scoring cost is paid here, in the artifact phase,
+    * where it is its own tracked number. The incremental query keeps
+    * building its per-half stats self-contained — that build IS its
+    * subject matter (the fold losslessness proof).
+    */
+  private val bm25ScoredArtifact = new Artifact("artifact_bm25_index", (spark, dir) => {
+    val (tf, dl, dfreq, stats) =
+      TextOps.bm25Stats(Tables.documents(spark, dir), "doc_id", "text")
+    TextOps.bm25ScoredPostings(
+      tf.localCheckpoint(true), dl.localCheckpoint(true),
+      dfreq.localCheckpoint(true), stats.localCheckpoint(true), "doc_id")
+      .localCheckpoint(true)
+  })
 
-  /** Train every shared session artifact (three tokenizer families + the
-    * near-dup pair graph) for `dir` NOW and return each
-    * training's wall-clock — the bench's explicit artifact phase. With the
-    * suite staged (family queries ride the memo), per-query times are
-    * marginal cost GIVEN the artifact; this is where the trainers' own
-    * cost is measured and reported, so a trainer regression shows up as
-    * its own tracked number instead of hiding inside whichever family
+  /** The staged HNSW index (working relation + scored pair relation
+    * under the frozen fit, both checkpointed): q_ann_hnsw and
+    * q_ann_hnsw_incr ride ONE quantizer fit, corpus routing and pair
+    * scoring instead of recomputing them per query (13% of the r11
+    * suite wall-clock). The incr query's hash-match against the shared
+    * oracle remains the staged≡from-scratch proof.
+    */
+  private val hnswIndexArtifact = new Artifact("artifact_hnsw_index", (spark, dir) =>
+    SimilarityOps.hnswStageIndex(
+      Tables.embeddings(spark, dir), "vec_id", "embedding",
+      nLists = 16, nProbe = 3, iters = 2))
+
+  /** Every shared session artifact, in artifact-phase order. */
+  private val artifacts: Seq[Artifact[_]] = Seq(
+    unigramArtifact, bpeTrainedArtifact, wordpieceTrainedArtifact,
+    neardupArtifact, bm25ScoredArtifact, hnswIndexArtifact)
+
+  /** Drop every memoized trained artifact. Harness hook: Bench clears
+    * after its warmup pass so the warmup-scale artifacts'
+    * localCheckpoint blocks become collectable (the memo would otherwise
+    * pin them through the measured run), then explicitly re-trains at
+    * the bench scale via [[trainArtifacts]].
+    */
+  def clearTrainedArtifacts(): Unit = artifacts.foreach(_.clear())
+
+  /** Names of the artifacts currently memoized for any session. */
+  private[graft] def memoizedArtifacts: Seq[String] = artifacts.filter(_.memoized).map(_.name)
+
+  /** Train every shared session artifact for `dir` NOW and return each
+    * training's wall-clock — the bench's explicit artifact phase. With
+    * the suite staged (family queries ride the memo), per-query times
+    * are marginal cost GIVEN the artifact; this is where the trainers'
+    * own cost is measured and reported, so a trainer regression shows up
+    * as its own tracked number instead of hiding inside whichever family
     * query happens to run first — and the >1.5× retry adjudication stays
     * work-equivalent for every family query (the memo state at retry
-    * matches the measured pass).
+    * matches the measured pass). Per-artifact fault isolation: one
+    * trainer throwing (bad data, OOM) reports -1 for ITS entry; the
+    * others still train and time, and the caller's query loop surfaces
+    * the broken family's queries individually.
     */
-  def trainArtifacts(spark: SparkSession, dir: String): Seq[(String, Double)] = {
-    // per-artifact fault isolation: one trainer throwing (bad data, OOM)
-    // reports -1 for ITS entry; the other still trains and times, and the
-    // caller's query loop surfaces the broken family's queries
-    // individually — failure honesty without losing the run
-    def timed(name: String)(body: => Unit): (String, Double) = {
+  def trainArtifacts(spark: SparkSession, dir: String): Seq[(String, Double)] =
+    artifacts.map { a =>
       val t0 = System.nanoTime()
-      try { body; name -> (System.nanoTime() - t0) / 1e9 }
+      try { a(spark, dir); a.name -> (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
-        System.err.println(s"[artifacts] $name failed: ${e.getMessage}")
-        name -> -1.0
+        System.err.println(s"[artifacts] ${a.name} failed: ${e.getMessage}")
+        a.name -> -1.0
       }
     }
-    Seq(
-      timed("artifact_unigram_train") { unigramArtifact(spark, dir); () },
-      timed("artifact_bpe_train") { bpeTrainedArtifact(spark, dir); () },
-      timed("artifact_wordpiece_train") { wordpieceTrainedArtifact(spark, dir); () },
-      timed("artifact_neardup_pairs") { neardupArtifact(spark, dir); () },
-      timed("artifact_bm25_index") { bm25IndexArtifact(spark, dir); () },
-      timed("artifact_hnsw_index") { hnswIndexArtifact(spark, dir); () })
-  }
 
   /** ONE definition of the segmentation cell packing (the scalar-cell
     * contract: space-joined pieces, mirrored by the oracles'

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Hand-rolled JSON output helpers shared by the Verify/Bench mains (no
@@ -52,21 +51,7 @@ object Verify {
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the bounded-heap UDAF aggregates (top-M adjacency, top-k
-      // search) in HASH mode: the default 128-distinct-key fallback
-      // degrades every group-heavy ObjectHashAggregate into a full sort
-      // of its input — measured 76s (spilling sort of a 101M-row pair
-      // stream) vs hash-mode minutes->seconds at the sf1 K=20 decade.
-      // Heap buffers are M-bounded (~500B), so 1M keys/partition is MBs
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val out = new java.io.File(outDir)
     if (out.isDirectory) {
       def rm(f: java.io.File): Unit = {

@@ -609,9 +609,14 @@ object Analytics {
     * month axis (year·12+month — exact arithmetic, no date-diff float
     * ambiguity). Endpoints are always observed (the spine is bounded by
     * observations), so every gap interpolates; `is_interpolated` marks
-    * reconstructed rows. Input must carry one row per (key, month);
-    * observation dates anywhere inside a month are normalized to its
-    * start (the last-trading-day convention joins correctly).
+    * reconstructed rows. Observation dates anywhere inside a month are
+    * normalized to its start (the last-trading-day convention joins
+    * correctly).
+    *
+    * Precondition: at most one row per (key, month) after that
+    * normalization. Two observations in one month tie on the window
+    * order, so which one a neighbor frame sees is arbitrary and the
+    * output is not deterministic; dedup upstream (e.g. last-wins).
     *
     * Scale shape: one bounds aggregate, a narrow spine explode, one left
     * join back on (key, month), and one exchange's worth of per-key window

@@ -369,8 +369,7 @@ object DedupOps {
       .agg(sort_array(collect_list(struct(col("sdf"), col("s")))).as("__ss"))
       .scopedCache()
     val nc = size(col("__ss"))
-    val prefixLen = greatest(
-      (nc - ceil(lit(threshold) * nc) + lit(1)).cast("int"), lit(0))
+    val prefixLen = greatest(prefixLength(nc, threshold).cast("int"), lit(0))
     val prefix = docsets
       .select(col(idCol), explode(slice(col("__ss"), lit(1), prefixLen)).as("__e"))
       .select(col(idCol), col("__e.s").as("s"))
@@ -391,6 +390,15 @@ object DedupOps {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
+
+  /** Rarest-first prefix length for a set of `nc` elements at Jaccard
+    * threshold t: nc − ceil(t·nc) + 1. Two sets with Jaccard ≥ t must
+    * share an element within these prefixes (prefix-filtering bound).
+    * The one definition both [[jaccardPairsPrefix]] and the spec-facing
+    * [[prefixCandidatePairsAnnotated]] use, so they cannot drift.
+    */
+  private def prefixLength(nc: Column, threshold: Double): Column =
+    nc - ceil(lit(threshold) * nc) + lit(1)
 
   /** The distinct candidate pairs whose rarest-first prefixes intersect —
     * split out so the spec can measure the candidate reduction against
@@ -418,7 +426,7 @@ object DedupOps {
     val prefix = exd
       .withColumn("pos", row_number().over(wDoc))
       .withColumn("nc", count(lit(1)).over(wAll))
-      .filter(col("pos") <= col("nc") - ceil(lit(threshold) * col("nc")) + lit(1))
+      .filter(col("pos") <= prefixLength(col("nc"), threshold))
       .select(col(idCol), col("s"))
     bucketPairs(prefix, idCol, "s").select(col("doc_a"), col("doc_b"))
   }

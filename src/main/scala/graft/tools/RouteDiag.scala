@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.ops.SimilarityOps
 
 /** Quantizer-routing structure probe: replicate the embeddings corpus K×
@@ -18,12 +17,7 @@ object RouteDiag {
   def main(args: Array[String]): Unit = {
     val ks = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(5, 10, 20)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     val baseEmb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     println("routediag: k,vectors,nLists,mode,seconds,volume,max_list,lists")
     ks.foreach { k =>

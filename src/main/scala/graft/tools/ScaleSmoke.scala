@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.ops.{Analytics, DedupOps, TextOps}
 
 /** Scaling smoke for the dedup pipelines: replicate the documents corpus
@@ -34,20 +34,7 @@ object ScaleSmoke {
     def ks(section: String, default: Seq[Int], deepKs: Seq[Int]): Seq[Int] =
       if (!want(section)) Seq[Int]() else if (deep) deepKs else default
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the bounded-heap UDAF aggregates (top-M adjacency, top-k
-      // search) in HASH mode: the default 128-distinct-key fallback
-      // degrades every group-heavy ObjectHashAggregate into a full sort
-      // of its input — measured 76s (spilling sort of a 101M-row pair
-      // stream) vs hash-mode minutes->seconds at the sf1 K=20 decade.
-      // Heap buffers are M-bounded (~500B), so 1M keys/partition is MBs
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     val base = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     // replica ids are offset by 1e6 per copy — ids at or above the stride

@@ -1,54 +1,33 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** Ad-hoc timing harness for a SUBSET of registered queries — the
   * iterate-on-one-plan complement of [[graft.Bench]] (which always runs all
-  * of them). Same methodology: noop-sink exhaust, per-query clearCache, one
-  * unmeasured warmup pass at the smallest SF.
+  * of them), with Bench's session, warmup and per-run timing.
   *
   * Usage: runMain graft.tools.TimeQueries q_name1 q_name2 ...
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4),
   * SPARK_GRAFT_REPS (default 1 measured rep per query).
   */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
     val names =
       if (args.nonEmpty) args.toSeq
       else sys.error("pass query names, e.g. runMain graft.tools.TimeQueries q_neardup_clusters")
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def exhaust(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    val warmDir =
-      if (new java.io.File("/root/testdata/sf0.001").isDirectory) "/root/testdata/sf0.001"
-      else sfDir
-    names.foreach { n =>
-      try exhaust(graft.SparkEntry.queries(n)(spark, warmDir))
-      catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-    }
+    val spark = GraftSession.local(GraftSession.cpus)
+    val smallDir = Bench.warmDir(sfDir)
+    names.foreach(n => Bench.warmup(spark, n)(Bench.exhaust(SparkEntry.queries(n)(spark, smallDir))))
     names.foreach { n =>
       (1 to reps).foreach { r =>
-        val t0 = System.nanoTime()
-        exhaust(graft.SparkEntry.queries(n)(spark, sfDir))
-        val dt = (System.nanoTime() - t0) / 1e9
-        // same hygiene as Bench: clearCache + a forced GC so the
-        // ContextCleaner frees dead localCheckpoint blocks between reps
-        spark.catalog.clearCache()
-        System.gc()
-        println(f"[time] $n rep$r: $dt%.2f s")
+        Bench.timed(spark, n)(Bench.exhaust(SparkEntry.queries(n)(spark, sfDir))) match {
+          case Some(dt) => println(f"[time] $n rep$r: $dt%.2f s")
+          case None => println(s"[time] $n rep$r: failed")
+        }
       }
     }
     spark.stop()

@@ -54,6 +54,9 @@ class AnalyticsRetrySpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(20260819L)
     def d(y: Int, m: Int) = java.sql.Date.valueOf(f"$y%04d-$m%02d-01")
+    // one price per (symbol, month): interpolateMonthlyGaps requires unique
+    // (key, month) rows — with a tied month both formulations would resolve
+    // the tie in arbitrary sort order
     val rows = (1 to 25).flatMap { sym =>
       val months = 1 + rnd.nextInt(30)
       (0 until months).flatMap { i =>
@@ -61,7 +64,7 @@ class AnalyticsRetrySpec extends AnyFunSuite {
           Some((sym.toLong, d(2020 + (i + rnd.nextInt(2)) / 12, 1 + (i % 12)), rnd.nextInt(2000) / 10.0))
         else None
       }
-    }.distinct
+    }.distinctBy(r => (r._1, r._2))
     val series = rows.toDF("symbol", "date", "price")
     val got = Analytics.interpolateMonthlyGaps(series, "symbol", "date", "price")
       .as[(Long, java.sql.Date, Option[Double], Boolean)].collect().toSet
