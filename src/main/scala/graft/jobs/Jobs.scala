@@ -1,7 +1,13 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.sql.Date
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.ops._
 
@@ -10,6 +16,28 @@ import graft.ops._
   * completion payload) out. The "fetch" step — an HTTP call in the reference —
   * is a join against a quotes/series feed DataFrame (tests feed parquet; a
   * live deployment would plug a DataSource V2 HTTP source, SURVEY.md §2.A A3).
+  *
+  * Request-bounded work runs on the driver, like the reference's own loops
+  * over the request list (`fetch_historical_market_data.py:191-215`). A job
+  * collects its request list once, reads the store's rows for the requested
+  * keys with ONE semi-join against that local list, decides what to fetch
+  * in driver memory — the rules of `Incremental.needingUpdate`,
+  * `fullyCovered` and `gapDetection` (B7, B9, B10), which
+  * `JobsBookkeepingSpec` checks the jobs against — and fetches with a join
+  * against the local plan. Request-level scalars (`now`, the month window)
+  * are evaluated once on the driver, so no per-request literal reaches
+  * generated code: a request's generated classes are the previous
+  * request's, which Spark's generated-class cache can serve.
+  *
+  * Pin contract: a live feed is nondeterministic, so every output of a job
+  * (store, completion, per-batch payloads) describes ONE evaluation of its
+  * fetch. Rows bounded by the request (the market and index jobs' fetched
+  * quotes, the cached rows of a cache-first or stale-fallback answer) are
+  * collected once into local relations. The historical job's fetched rows
+  * scale with history length, so they stay a distributed `localCheckpoint`
+  * of which only per-(asset_type, symbol) counts are collected. Completion
+  * and per-batch rows are built on the driver as local relations: a caller
+  * collecting them runs no Spark job.
   */
 object Jobs {
 
@@ -18,7 +46,7 @@ object Jobs {
     * attached by the caller, not computed here, to keep jobs pure.
     *
     * `perBatch` is the per-batch completion relation (one payload row per
-    * batch, `Batching.completionPerBatch`) for jobs whose reference
+    * batch, `Batching.completionPerBatch`'s schema) for jobs whose reference
     * counterpart publishes inside the batch loop — only the historical job
     * does (`fetch_historical_market_data.py:207-213`); the market-data and
     * index jobs publish a single final message, so they carry None.
@@ -32,6 +60,59 @@ object Jobs {
   val RequiredFields: Seq[String] =
     Seq("symbol", "asset_type", "price", "percent_change", "change", "high", "low")
 
+  // completion schemas, field for field as the Spark aggregates they
+  // replace typed them: a count is non-null, a ceil of a division is not
+  private def countField(name: String) = StructField(name, LongType, nullable = false)
+  private val Status = StructField("status", StringType, nullable = false)
+  private val Batches100 = StructField("total_batches", LongType)
+  private val MarketCompletion =
+    StructType(Seq(countField("record_count"), Batches100, countField("total_assets"), Status))
+  private val IndexCompletion =
+    StructType(Seq(countField("record_count"), Batches100, countField("total_symbols"), Status))
+  private val HistoricalCompletion =
+    StructType(Seq("record_count", "total_batches", "total_symbols").map(countField) :+ Status)
+  private val CachedCompletion =
+    StructType(Seq("record_count", "total_symbols", "total_batches").map(countField) :+ Status)
+
+  private def local(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** `cols` over one empty row: the optimizer folds the projection into a
+    * local relation, so evaluating it runs no Spark job.
+    */
+  private def scalars(spark: SparkSession, cols: Column*): DataFrame =
+    local(spark, StructType(Nil), Seq(Row())).select(cols: _*)
+
+  /** Evaluates a request-bounded relation ONCE and pins its rows in a local
+    * relation; returns the rows too, for driver-side bookkeeping.
+    */
+  private def pinLocal(df: DataFrame): (Seq[Row], DataFrame) = {
+    val rows = df.collect().toSeq
+    (rows, local(df.sparkSession, df.schema, rows))
+  }
+
+  /** [[pinLocal]] for a fetch, with the job's clock `now` evaluated once on
+    * the driver and attached as `updated_at`.
+    */
+  private def pinFetch(fetched: DataFrame, now: Column): (Seq[Row], DataFrame) = {
+    val clock = scalars(fetched.sparkSession, now.as("updated_at"))
+    val at = clock.head().get(0)
+    val rows = fetched.collect().toSeq.map(r => Row.fromSeq(r.toSeq :+ at))
+    (rows, local(fetched.sparkSession, fetched.schema.add(clock.schema.head), rows))
+  }
+
+  /** The store's rows whose `keys` a (local) request relation names,
+    * projected to `cols`: a semi-join that broadcasts the request side.
+    * Bounded by the request for a store keyed on `keys`.
+    */
+  private def storedFor(store: DataFrame, requested: DataFrame, keys: Seq[String], cols: Column*): Seq[Row] =
+    store.join(requested, keys, "left_semi").select(cols: _*).collect().toSeq
+
+  /** Reference batch count for a single final message of `n` records, 100
+    * per batch (`fetch_market_data.py:93`, `fetch_market_index_data.py:171`).
+    */
+  private def batchesOf100(n: Long): Long = (n + 99) / 100
+
   /** §3.1 MARKET_DATA_UPDATE_REQUEST: anti-join update planning → fetch
     * (join) → required-field validation → last-wins upsert → completion.
     */
@@ -40,14 +121,14 @@ object Jobs {
       store: DataFrame,    // snapshot keyed (symbol, asset_type)
       quotes: DataFrame,   // feed with RequiredFields columns
       now: Column): JobResult = {
-    val needed = Incremental.needingUpdate(requests, store, SnapshotKeys)
-    val fetched = needed.join(quotes, SnapshotKeys)
-    // pinned ONCE: a live quotes source is nondeterministic, and the two
-    // outputs (store and completion) must describe the SAME evaluation —
-    // same contract as indexUpdate
-    val valid = Relational.filterValid(fetched, RequiredFields)
-      .withColumn("updated_at", now)
-      .localCheckpoint(true)
+    val spark = store.sparkSession
+    val (requested, requestFrame) = pinLocal(requests.select(SnapshotKeys.map(col): _*))
+    // B7: the request rows whose key the store lacks (a NULL key never
+    // matches, so it is "needed" and then drops out of the fetch join)
+    val stored = storedFor(store, requestFrame, SnapshotKeys, SnapshotKeys.map(col): _*).toSet
+    val needed = local(spark, requestFrame.schema, requested.filterNot(stored))
+    val (rows, valid) = pinFetch(
+      Relational.filterValid(needed.join(quotes, SnapshotKeys), RequiredFields), now)
     // EXCLUDED-wins via explicit source priority (fresh=1 > store=0), like
     // historicalBackfill: ordering by updated_at alone can TIE (a stored
     // row from a retried run carries the same pinned `now`), making the
@@ -56,20 +137,19 @@ object Jobs {
       store.withColumn("__src", lit(0)),
       valid.withColumn("__src", lit(1)),
       SnapshotKeys, Seq(col("__src"), col("updated_at"))).drop("__src")
-    val completion = valid
-      .agg(
-        count(lit(1)).as("record_count"),
-        ceil(count(lit(1)) / lit(100.0)).cast("long").as("total_batches"),
-        // the job's asset identity is the composite key — a symbol listed
-        // under two asset types is two assets, like the reference's
-        // len(assets) over (symbol, asset_type) request entries
-        countDistinct(col("symbol"), col("asset_type")).as("total_assets"))
-      .withColumn("status", lit("complete"))
+    // the job's asset identity is the composite key — a symbol listed under
+    // two asset types is two assets, like the reference's len(assets) over
+    // (symbol, asset_type) request entries (both keys are non-null: valid)
+    val key = SnapshotKeys.map(valid.schema.fieldIndex)
+    val assets = rows.map(r => key.map(r.getString)).distinct
+    val n = rows.size.toLong
+    val completion = local(spark, MarketCompletion,
+      Seq(Row(n, batchesOf100(n), assets.size.toLong, "complete")))
     JobResult(updated, completion)
   }
 
   /** §3.2 HISTORICAL_MARKET_DATA_REQUEST: coverage scan → month-gap
-    * detection → range-bounded fetch (join) → monthly last-close → upsert
+    * detection → range-bounded fetch (join) → monthly last-close upsert
     * keyed (symbol, date, asset_type) → completion.
     */
   def historicalBackfill(
@@ -78,71 +158,106 @@ object Jobs {
       series: DataFrame,   // feed (symbol, asset_type, datetime ts, close)
       start: Column,
       stop: Column): JobResult = {
-    val gaps = Incremental.gapDetection(
-      requests, store.select(col("symbol"), col("asset_type"), col("date")),
-      Seq("symbol", "asset_type"), "date", start, stop)
-    // fetch one [gap_start, gap_end] span per key (range coalescing,
-    // fetch_utils.py:231), over-fetching then collapsing via upsert.
-    // Pinned ONCE: a live series feed is nondeterministic, and the three
-    // outputs (store, completion, per-batch payloads) must all describe
-    // the SAME evaluation
+    val spark = requests.sparkSession
+    val keyCols = Seq("asset_type", "symbol")
+    val keys = requests.select(keyCols.map(col): _*).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1))).distinct
+    // B10 (Incremental.gapDetection): the month spine of each requested key
+    // — both bounds truncated to their month, empty when inverted
+    // (Incremental.monthSpine) — minus the months the store covers; one
+    // [gap_start, gap_end] fetch span per key with a hole (range
+    // coalescing, fetch_utils.py:231)
+    val bounds = scalars(spark,
+      to_date(date_trunc("month", start)), to_date(date_trunc("month", stop))).head()
+    val months =
+      if (bounds.anyNull) Nil
+      else Iterator.iterate(bounds.getDate(0).toLocalDate)(_.plusMonths(1))
+        .takeWhile(!_.isAfter(bounds.getDate(1).toLocalDate)).toSeq
+    val spine = local(spark,
+      StructType(keyCols.map(StructField(_, StringType)) :+ StructField("month", DateType)),
+      for ((t, s) <- keys; m <- months) yield Row(t, s, Date.valueOf(m)))
+    // the spine rides as data, not as literals, so the coverage scan's
+    // generated code is the same for every request
+    val covered = storedFor(
+      store.withColumn("month", to_date(date_trunc("month", col("date")))),
+      spine, keyCols :+ "month", (keyCols :+ "month").map(col): _*).toSet
+    val gaps = local(spark,
+      StructType(keyCols.map(StructField(_, StringType)) ++
+        Seq(StructField("gap_start", DateType), StructField("gap_end", DateType))),
+      keys.flatMap { case (t, s) =>
+        val missing = months.map(Date.valueOf).filterNot(m => covered(Row(t, s, m)))
+        missing.headOption.map(Row(t, s, _, missing.last))
+      })
+    // over-fetch each span, then collapse via upsert. Pinned ONCE
+    // (distributed: it scales with history length, not with the request)
     val fetched = series
-      .join(gaps, Seq("symbol", "asset_type"))
+      .join(gaps, keyCols)
       .filter(
         col("datetime") >= col("gap_start") &&
           col("datetime") < add_months(col("gap_end"), 1))
       .localCheckpoint(true)
-    // close rides as the final tiebreaker: two feed rows with the same
-    // (symbol, type, datetime) — duplicate delivery or a vendor correction —
-    // must resolve deterministically (Merge.lastWins' total-order contract);
-    // feeds carrying an event id should include it in the projection instead
-    val monthly = Merge.lastWins(
-      fetched
-        .withColumn("date", to_date(date_trunc("month", col("datetime"))))
-        .select(col("symbol"), col("asset_type"), col("date"), col("close").as("price"), col("datetime")),
-      Seq("symbol", "asset_type", "date"),
-      Seq(col("datetime"), col("price"))).drop("datetime")
-    // EXCLUDED-wins (ON CONFLICT DO UPDATE SET price = EXCLUDED.price,
+    // ONE window does both the monthly last-close and the upsert. EXCLUDED-
+    // wins (ON CONFLICT DO UPDATE SET price = EXCLUDED.price,
     // fetch_historical_market_data.py:92-103): a coalesced [gap_start,
     // gap_end] span can re-fetch months the store already covers, and the
-    // freshly fetched value must ALWAYS replace the stored one — so order the
-    // merge by an explicit source-priority column (delta=1 > store=0), never
-    // by a payload value.
+    // freshly fetched value must ALWAYS replace the stored one — so the
+    // merge orders by an explicit source-priority column (delta=1 >
+    // store=0) first, never by a payload value. Among fetched rows the
+    // month's last close wins; close rides as the final tiebreaker: two
+    // feed rows with the same (symbol, type, datetime) — duplicate delivery
+    // or a vendor correction — must resolve deterministically
+    // (Merge.lastWins' total-order contract)
     val updated = Merge.upsert(
-      store.withColumn("__src", lit(0)),
-      monthly.withColumn("__src", lit(1)),
-      Seq("symbol", "asset_type", "date"), Seq(col("__src"))).drop("__src")
+      store.withColumn("__src", lit(0)).withColumn("datetime", lit(null).cast("timestamp")),
+      fetched.select(
+        col("symbol"), col("asset_type"),
+        to_date(date_trunc("month", col("datetime"))).as("date"),
+        col("close").as("price"), col("datetime"), lit(1).as("__src")),
+      Seq("symbol", "asset_type", "date"),
+      Seq(col("__src"), col("datetime"), col("price"))).drop("__src", "datetime")
+    // record counts are over FETCHED rows (the reference's len(data) /
+    // total_record_count), not the collapsed monthly rows — a month with 30
+    // daily feed rows counts 30 fetched records but stores one row
+    val fetchedPerKey = fetched.groupBy(keyCols.map(col): _*).count().collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     // per-batch completion events (publish-inside-the-loop,
     // fetch_historical_market_data.py:207-213): requested symbols batched
     // 50 per asset type, one payload row per batch with the batch's symbol
     // list and its fetched-record count (0-record symbols still listed)
-    val symbolBatches = Batching.assignBatches(
-      requests.select(col("symbol"), col("asset_type")).distinct(),
-      Seq("asset_type"), "symbol", 50)
+    val batches = Batching.chunkPerGroup(keys, 50)
     // total_batches must RECONCILE with the per-batch payloads: batching is
     // per asset type, so the total is the number of (asset_type, batch_id)
     // slots — a global ceil(distinct symbols / 50) undercounts whenever
     // more than one asset type is requested
-    val nBatches = symbolBatches
-      .select(col("asset_type"), col("batch_id")).distinct()
-      .agg(count(lit(1)).as("total_batches"))
-    // record counts are over FETCHED rows (the reference's len(data) /
-    // total_record_count), not the collapsed monthly rows — a month with 30
-    // daily feed rows counts 30 fetched records but stores one row
-    val completion = fetched
-      .agg(
-        count(lit(1)).as("record_count"),
-        countDistinct(col("symbol")).as("total_symbols"))
-      .crossJoin(broadcast(nBatches))
-      .select(col("record_count"), col("total_batches"), col("total_symbols"))
-      .withColumn("status", lit("complete"))
-    val perBatch = Batching
-      .completionPerBatch(
-        symbolBatches, fetched.select(col("symbol"), col("asset_type")),
-        Seq("asset_type"), "symbol")
+    val completion = local(spark, HistoricalCompletion, Seq(Row(
+      fetchedPerKey.values.sum, batches.size.toLong,
+      fetchedPerKey.keySet.map(_._2).size.toLong, "complete")))
+    val perBatch = local(spark, perBatchSchema(requests.schema("asset_type")),
+      batches.map { case (assetType, batchId, symbols) =>
+        Row(assetType, batchId, symbols.filter(_ != null), symbols.size.toLong,
+          symbols.map(s => fetchedPerKey.getOrElse((assetType, s), 0L)).sum, "complete")
+      })
       .withColumn("start_date", to_date(start))
       .withColumn("end_date", to_date(stop))
     JobResult(updated, completion, Some(perBatch))
+  }
+
+  /** `Batching.completionPerBatch`'s schema over a request list whose group
+    * column is `assetType`.
+    */
+  private def perBatchSchema(assetType: StructField): StructType = StructType(Seq(
+    assetType,
+    StructField("batch_id", LongType),
+    StructField("symbols", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("symbol_count", LongType, nullable = false),
+    StructField("record_count", LongType),
+    Status))
+
+  /** Completion of an answer served from the store's `stored` rows. */
+  private def cachedCompletion(spark: SparkSession, stored: Seq[Row], status: String): DataFrame = {
+    val symbols = stored.map(_.getString(0))
+    local(spark, CachedCompletion,
+      Seq(Row(symbols.size.toLong, symbols.filter(_ != null).distinct.size.toLong, 0L, status)))
   }
 
   /** §3.3 error path — stale-on-error fallback
@@ -157,21 +272,16 @@ object Jobs {
       now: Column): JobResult =
     try {
       val r = indexUpdate(requests, store, fetchQuotes(), now)
-      // pin the evaluated result, not just probe it: an un-checkpointed
-      // lineage would RE-RUN the fetch at the caller's action, where a
-      // flaky source could throw outside this try (or return different
-      // rows than the ones probed here)
-      JobResult(
-        r.store.localCheckpoint(true), r.completion.localCheckpoint(true),
-        r.perBatch.map(_.localCheckpoint(true)))
+      // pin the evaluated store, not just probe it: an un-checkpointed
+      // lineage would RE-RUN the upsert at the caller's action, where a
+      // failing store read could throw outside this try. The completion
+      // is already a local relation (nothing left to evaluate)
+      r.copy(store = r.store.localCheckpoint(true))
     } catch {
-      case scala.util.control.NonFatal(_) =>
-        val cached = store.join(requests, Seq("symbol"), "left_semi")
-        val completion = cached
-          .agg(count(lit(1)).as("record_count"), countDistinct(col("symbol")).as("total_symbols"))
-          .withColumn("total_batches", lit(0L))
-          .withColumn("status", lit("stale_fallback"))
-        JobResult(store, completion)
+      case NonFatal(_) =>
+        val (_, requested) = pinLocal(requests.select(col("symbol")))
+        JobResult(store, cachedCompletion(store.sparkSession,
+          storedFor(store, requested, Seq("symbol"), col("symbol")), "stale_fallback"))
     }
 
   /** B15 — retry-queue partition: split a fetch-attempt relation into
@@ -239,42 +349,38 @@ object Jobs {
       store: DataFrame,    // index snapshot keyed (symbol)
       quotes: DataFrame,   // feed (symbol, regularMarketPrice, …)
       now: Column): JobResult = {
-    if (Incremental.fullyCovered(requests, store, Seq("symbol"))) {
+    val spark = store.sparkSession
+    val (requested, requestFrame) = pinLocal(requests.select(col("symbol")))
+    // the request's stored rows: both the B9 cache-first test (every
+    // requested symbol stored — Incremental.fullyCovered) and, when it
+    // holds, the cached answer's counts
+    val stored = storedFor(store, requestFrame, Seq("symbol"), col("symbol"))
+    if (requested.forall(stored.toSet)) {
       // B9: everything cached — re-emit existing rows, no fetch
-      val data = store.join(requests, Seq("symbol"), "left_semi")
-      val completion = data
-        .agg(count(lit(1)).as("record_count"), countDistinct(col("symbol")).as("total_symbols"))
-        .withColumn("total_batches", lit(0L))
-        .withColumn("status", lit("complete_cached"))
-      JobResult(store, completion)
+      JobResult(store, cachedCompletion(spark, stored, "complete_cached"))
     } else {
-      val fetched = Relational.renameProject(
-        requests.join(quotes, Seq("symbol")),
+      // pinned ONCE: a live quote source is nondeterministic, and both
+      // outputs (store AND completion) must describe the SAME evaluation
+      // — without this, a caller materializing them separately could see
+      // a completion that doesn't count the rows actually upserted
+      val (rows, fetched) = pinFetch(Relational.renameProject(
+        requestFrame.join(quotes, Seq("symbol")),
         Seq(
           "symbol" -> "symbol",
           "regularMarketPrice" -> "price",
           "regularMarketChange" -> "price_change",
           "regularMarketChangePercent" -> "percent_change",
           "regularMarketDayHigh" -> "price_high",
-          "regularMarketDayLow" -> "price_low"))
-        .withColumn("updated_at", now)
-        // pinned ONCE: a live quote source is nondeterministic, and both
-        // outputs (store AND completion) must describe the SAME evaluation
-        // — without this, a caller materializing them separately could see
-        // a completion that doesn't count the rows actually upserted
-        .localCheckpoint(true)
+          "regularMarketDayLow" -> "price_low")), now)
       // EXCLUDED-wins via source priority — updated_at can tie on retries
       val updated = Merge.upsert(
         store.withColumn("__src", lit(0)),
         fetched.withColumn("__src", lit(1)),
         Seq("symbol"), Seq(col("__src"), col("updated_at"))).drop("__src")
-      val completion = fetched
-        .agg(
-          count(lit(1)).as("record_count"),
-          ceil(count(lit(1)) / lit(100.0)).cast("long").as("total_batches"),
-          countDistinct(col("symbol")).as("total_symbols"))
-        .withColumn("status", lit("complete"))
-      JobResult(updated, completion)
+      val n = rows.size.toLong
+      val symbols = rows.map(_.getString(fetched.schema.fieldIndex("symbol"))).distinct.size.toLong
+      JobResult(updated, local(spark, IndexCompletion,
+        Seq(Row(n, batchesOf100(n), symbols, "complete"))))
     }
   }
 }

@@ -44,6 +44,27 @@ object Batching {
     df.withColumn("batch_id", ceil(row_number().over(w) / lit(size.toDouble)).cast("long"))
   }
 
+  /** Spark's ascending string order: NULL first, then UTF-8 binary order
+    * (code-point order — NOT `String.compareTo`'s UTF-16 order, which
+    * sorts supplementary-plane characters below U+E000..U+FFFF).
+    */
+  val sparkStringOrder: Ordering[String] = (a, b) =>
+    if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+    else java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** B14 on the driver, for request-bounded `(group, key)` lists: the
+    * [[assignBatches]] rule over the DISTINCT pairs — keys in
+    * [[sparkStringOrder]], contiguous batches of `size` per group, ids from
+    * 1. One `(group, batch_id, keys)` per batch, groups in the same order.
+    */
+  def chunkPerGroup(pairs: Seq[(String, String)], size: Int): Seq[(String, Long, Seq[String])] =
+    pairs.distinct.groupBy(_._1).toSeq.sortBy(_._1)(sparkStringOrder).flatMap { case (g, ps) =>
+      ps.map(_._2).sorted(sparkStringOrder).grouped(size).zipWithIndex
+        .map { case (keys, i) => (g, i + 1L, keys) }
+    }
+
   /** B17 — completion stats per group: counts, batch totals, status literal.
     * `processingTimeMs` is wall-clock driver state in the reference — it is
     * attached by the job layer (graft.jobs), not the relational op.

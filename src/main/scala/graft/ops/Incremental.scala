@@ -35,8 +35,9 @@ object Incremental {
     requested.join(stored, keys, "left_semi")
 
   /** B9 — cache-first short-circuit guard (`fetch_market_index_data.py:161-165`):
-    * true iff every requested key is already stored. Driver-side branch; the
-    * two counts are cheap (semi-join + count on the small request side).
+    * true iff every requested key is already stored. Driver-side branch: one
+    * Spark job, an `isEmpty` probe of the [[needingUpdate]] anti-join (the
+    * small request side against the store's key columns).
     */
   def fullyCovered(requested: DataFrame, stored: DataFrame, keys: Seq[String]): Boolean =
     needingUpdate(requested, stored, keys).isEmpty
