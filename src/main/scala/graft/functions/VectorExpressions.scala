@@ -105,9 +105,26 @@ case class L2SquaredFp(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_l2sq"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    L2SquaredFp.distance(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  // generated code calls the same function, so every caller shares one
+  // definition of the arithmetic
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"${L2SquaredFp.getClass.getName.stripSuffix("$")}.distance($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object L2SquaredFp {
+
+  /** The kernel's arithmetic on two non-null arrays: the expression's
+    * interpreted and generated forms and the Lloyd fit's driver-side
+    * assignment step all call it, so they agree bit for bit.
+    */
+  def distance(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var acc = 0L
     var i = 0
@@ -120,28 +137,6 @@ case class L2SquaredFp(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    long $d = $a.getLong($i) - $b.getLong($i);
-         |    $acc += $d * $d;
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Integer dot product over two array<bigint> fixed-point vectors — the

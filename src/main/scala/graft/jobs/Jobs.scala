@@ -21,13 +21,14 @@ import graft.ops._
   * over the request list (`fetch_historical_market_data.py:191-215`). A job
   * collects its request list once, reads the store's rows for the requested
   * keys with ONE semi-join against that local list, decides what to fetch
-  * in driver memory — the rules of `Incremental.needingUpdate`,
-  * `fullyCovered` and `gapDetection` (B7, B9, B10), which
-  * `JobsBookkeepingSpec` checks the jobs against — and fetches with a join
-  * against the local plan. Request-level scalars (`now`, the month window)
-  * are evaluated once on the driver, so no per-request literal reaches
-  * generated code: a request's generated classes are the previous
-  * request's, which Spark's generated-class cache can serve.
+  * in driver memory — rule B7 of `Incremental.needingUpdate`, the B9
+  * cache-first guard (every requested key stored) and B10 of
+  * `gapDetection`, which `JobsBookkeepingSpec` checks the jobs against —
+  * and fetches with a join against the local plan. Request-level scalars
+  * (`now`, the month window) are evaluated once on the driver, so no
+  * per-request literal reaches generated code: a request's generated
+  * classes are the previous request's, which Spark's generated-class cache
+  * can serve.
   *
   * Pin contract: a live feed is nondeterministic, so every output of a job
   * (store, completion, per-batch payloads) describes ONE evaluation of its
@@ -352,8 +353,8 @@ object Jobs {
     val spark = store.sparkSession
     val (requested, requestFrame) = pinLocal(requests.select(col("symbol")))
     // the request's stored rows: both the B9 cache-first test (every
-    // requested symbol stored — Incremental.fullyCovered) and, when it
-    // holds, the cached answer's counts
+    // requested symbol stored) and, when it holds, the cached answer's
+    // counts
     val stored = storedFor(store, requestFrame, Seq("symbol"), col("symbol"))
     if (requested.forall(stored.toSet)) {
       // B9: everything cached — re-emit existing rows, no fetch

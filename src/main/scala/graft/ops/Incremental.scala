@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
   *
   *  - anti-join "needs update" (`fetch_market_data.py:16-29`) → B7
   *  - semi-join "already stored" probe (`etl/fetch_utils.py:118-151`) → B8
+  *  - B9, the cache-first guard, is applied on the driver by
+  *    `graft.jobs.Jobs.indexUpdate`
   *  - calendar-spine month-gap detection
   *    (`etl/fetch_utils.py:203-233`) → B10
   *  - date-range normalization (`etl/fetch_utils.py:182-201`) → B11
@@ -33,14 +35,6 @@ object Incremental {
   /** B8 — keys already present in the store (the complement probe). */
   def existing(requested: DataFrame, stored: DataFrame, keys: Seq[String]): DataFrame =
     requested.join(stored, keys, "left_semi")
-
-  /** B9 — cache-first short-circuit guard (`fetch_market_index_data.py:161-165`):
-    * true iff every requested key is already stored. Driver-side branch: one
-    * Spark job, an `isEmpty` probe of the [[needingUpdate]] anti-join (the
-    * small request side against the store's key columns).
-    */
-  def fullyCovered(requested: DataFrame, stored: DataFrame, keys: Seq[String]): Boolean =
-    needingUpdate(requested, stored, keys).isEmpty
 
   /** Month spine: one row per key per first-of-month between `start` and
     * `stop` (inclusive, like the reference's `month_range`,

@@ -1,8 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 import Caching.Syntax
 
@@ -984,9 +992,9 @@ object SimilarityOps {
       val byCell = a1.join(q, Seq(idCol))
       val seedW = Window.partitionBy(col("c1")).orderBy(col(idCol))
       val sampleMod2 = math.max(1L, n / math.max(40L * nLists.toLong, 4000L))
-      // eager checkpoint: pqLloyd scans its input once per assign/update
-      // per round — an uncut lineage re-executes the corpus-wide argmin
-      // + per-cell window 4+ times (measured as a 10s routing plan over
+      // eager checkpoint: pqLloyd scans its input to seed and once per
+      // round — an uncut lineage re-executes the corpus-wide argmin +
+      // per-cell window each time (measured as a 10s routing plan over
       // 10k vectors before the cut)
       val fit2 = byCell
         .join(broadcast(caps), Seq("c1"))
@@ -997,7 +1005,6 @@ object SimilarityOps {
         .localCheckpoint()
       val cents2 = pqLloyd(fit2, idCol, k2max, iters,
         subCaps = Some(caps.select(col("c1").as("sub"), col("__cap"))))
-      val (c1c, c2c) = (cents1.localCheckpoint(), cents2.localCheckpoint())
       // auto cap in CENSUS units: 4× the balanced census membership
       // (censusProbe·n/nLists). A tighter multiple (the first cut used
       // 4× balanced OWNERSHIP = 1.33× balanced membership) subdivides
@@ -1009,7 +1016,7 @@ object SimilarityOps {
           math.max(FineCapFloor,
             4L * censusProbe * ((n + nLists - 1) / nLists))
         else fineCap
-      if (cap >= n) HierRouting(c1c, c2c, k2max)
+      if (cap >= n) HierRouting(cents1, cents2, k2max)
       else {
         // level 3: MEMBERSHIP census under the frozen two-level tree at
         // the representative probe depth (see FineCensusProbe — whales
@@ -1018,9 +1025,9 @@ object SimilarityOps {
         // cost: it is retained on the routing artifact and serves as the
         // fit corpus's own base routing (the common self-build path), so
         // the fit+route total stays one coarse+fine pass either way.
-        val census = hierFine(q, idCol, c1c, c2c, k2max, censusProbe)
+        val census = hierFine(q, idCol, cents1, cents2, k2max, censusProbe)
           .localCheckpoint()
-        val withCensus = HierRouting(c1c, c2c, k2max,
+        val withCensus = HierRouting(cents1, cents2, k2max,
           census = Some(census), censusOf = q, censusK = censusProbe)
         val hot = census.groupBy(col("cid")).agg(count(lit(1)).as("__pop"))
           .filter(col("__pop") > cap)
@@ -1048,7 +1055,6 @@ object SimilarityOps {
           val cents3 = pqLloyd(fit3, idCol, k3max, iters,
             subCaps = Some(caps3.select(col("cid").as("sub"), col("__cap"))))
             .select(col("sub").as("cid"), col("cid").as("scid"), col("cfp"))
-            .localCheckpoint()
           withCensus.copy(cents3 = Some(cents3), s3 = k3max + 1L)
         }
       }
@@ -2015,7 +2021,7 @@ object SimilarityOps {
       corpus: DataFrame, idCol: String, vecCol: String,
       nLists: Int = 16, iters: Int = 2): DataFrame =
     lloyd(quantizeNormFp(preparedNonZero(corpus, idCol, vecCol), idCol),
-      idCol, nLists, iters).localCheckpoint()
+      idCol, nLists, iters)
 
   /** [[hnswScoredPairs]] over `(id, vfp)` relations with externally-held
     * centroids — the streaming maintainer's pair-block generator.
@@ -2325,17 +2331,15 @@ object SimilarityOps {
     * registered query's oracle replays the iterations as unrolled CTEs.
     * Deterministic seeding: the k lowest-id vectors are the initial
     * centroids (rank order = centroid id). An emptied cluster keeps its
-    * previous centroid (coalesce against the prior round), so k is stable
-    * across iterations.
+    * previous centroid, so k is stable across iterations.
     *
-    * Shape per iteration: assignment is a broadcast of the k centroid
-    * arrays against one corpus scan (a codegen'd integer fold per
-    * (vector, centroid), k·n rows of (id, cid, dist) — never shuffled
-    * vectors); the update is one posexplode to (cid, dim) integer sums —
-    * k·dim groups, dimension-sized — and an array rebuild. Centroids are
-    * localCheckpointed per round (the connectedComponents discipline).
-    * At 100 TB: the corpus scans `iters` times but only 8-byte triples
-    * ever shuffle; k·dim state is driver-broadcast, not driver-looped.
+    * Shape: the fit ([[fitLloyd]]) holds the k centroids in driver
+    * memory and runs ONE Spark job per round — each task assigns its
+    * vectors and returns k·dim partial sums, which the driver merges into
+    * the next centroids. At 100 TB the corpus scans `iters` times and
+    * nothing shuffles; the final assignment is one broadcast of the k
+    * centroids against one corpus scan and an argmin aggregate over
+    * (id, cid, dist) triples.
     *
     * Output: (id, cid, dist_fp) for the final assignment.
     */
@@ -2397,8 +2401,8 @@ object SimilarityOps {
   /** Split an already-quantized `(idCol, vfp)` relation into its `m`
     * contiguous sub-vectors — `(idCol, sub, svfp)` with `svfp` the exact
     * BIGINT-millionth slice `vfp[sub·d/m … (sub+1)·d/m)`. One generator +
-    * slice projection, no shuffle; the sub key is what lets ONE
-    * distributed job per Lloyd round train all `m` codebooks at once.
+    * slice projection, no shuffle; the sub key is what lets one grouped
+    * Lloyd fit ([[pqLloyd]]) train all `m` codebooks at once.
     */
   private def subSplit(v: DataFrame, idCol: String, dim: Int, m: Int): DataFrame = {
     require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
@@ -2426,55 +2430,27 @@ object SimilarityOps {
       .select(col(idCol), col("sub"), col("m.c").as("code"), col("m.d").as("dist_fp"))
   }
 
-  /** Per-sub Lloyd over the `(id, sub, svfp)` relation — [[lloyd]] with
-    * `sub` as an extra grouping key, so ONE assignment job and ONE update
-    * job per round train all m codebooks simultaneously instead of m
-    * driver-looped fits. Same engine-exact discipline: k-lowest-id seeding
-    * per sub (the same seed ids in every subspace), truncated-div means,
-    * emptied codes keep their prior codeword, localCheckpoint per round.
+  /** Per-sub Lloyd over the `(id, sub, svfp)` relation — [[fitLloyd]]
+    * grouped by `sub`, so one job per round trains all m codebooks at once
+    * instead of m driver-looped fits. Same engine-exact discipline:
+    * k-lowest-id seeding per sub (the same seed ids in every subspace),
+    * truncated-div means, emptied codes keep their prior codeword.
+    * `subCaps` `(sub, __cap)` is an optional per-group codeword budget
+    * ≤ kSub (the hier router's population-proportional fine capacity);
+    * absent, every group seeds kSub codewords.
     */
-  private def pqLloyd(
+  private[graft] def pqLloyd(
       s: DataFrame, idCol: String, kSub: Int, iters: Int,
-      subCaps: Option[DataFrame] = None): DataFrame = {
-    require(kSub >= 1, "kSub must be positive")
-    require(iters >= 1, "need at least one iteration")
-    val seedW = Window.partitionBy(col("sub")).orderBy(col(idCol))
-    // subCaps (sub, __cap): optional PER-GROUP codeword budget ≤ kSub —
-    // the hier router's population-proportional fine capacity. Absent
-    // (every PQ codebook), all groups seed kSub codewords as before.
-    val seeded = s.withColumn("rn", row_number().over(seedW))
-    val capped = subCaps match {
-      case None => seeded.filter(col("rn") <= kSub)
-      case Some(c) => seeded.join(broadcast(c), Seq("sub"))
-        .filter(col("rn") <= least(col("__cap"), lit(kSub.toLong)))
-    }
-    var codebooks = capped
-      .select(col("sub"), (col("rn").cast("long") - 1).as("cid"), col("svfp").as("cfp"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val means = pqAssignFp(s, idCol, codebooks)
-        .withColumnRenamed("code", "cid")
-        .join(s, Seq(idCol, "sub"))
-        .select(col("sub"), col("cid"), posexplode(col("svfp")).as(Seq("pos", "x")))
-        .groupBy(col("sub"), col("cid"), col("pos"))
-        .agg(sum(col("x")).as("sm"), count(lit(1)).as("n"))
-        .select(col("sub"), col("cid"), col("pos"), expr("sm div n").as("mn"))
-        .groupBy(col("sub"), col("cid"))
-        .agg(DedupOps.bindOnce(sort_array(collect_list(struct(col("pos"), col("mn"))))) { arr =>
-          transform(arr, e => e.getField("mn"))
-        }.as("cfp_new"))
-      codebooks = codebooks.join(means, Seq("sub", "cid"), "left")
-        .select(col("sub"), col("cid"), coalesce(col("cfp_new"), col("cfp")).as("cfp"))
-        .localCheckpoint()
-    }
-    codebooks
-  }
+      subCaps: Option[DataFrame] = None): DataFrame =
+    fitLloyd(s, idCol, Some("sub"), "svfp", kSub, iters, subCaps)
 
   /** Train product-quantization codebooks: `m` per-subspace codebooks of
     * `kSub` codewords each, fit with the fixed-point Lloyd discipline
     * (engine-exact — the registered encode query replays the fit as
     * unrolled CTEs in the oracle). Returns `(sub, cid, cfp)` — m·kSub
-    * rows, broadcastable everywhere it is consumed.
+    * rows in a local relation, broadcastable everywhere it is consumed.
+    * The fit ([[pqLloyd]]) runs one Spark job to seed and one per round
+    * for all m subspaces together.
     *
     * The 100 TB posture mirrors [[kmeansCentroids]]: train on a sample,
     * persist this tiny relation once per corpus version, and encode /
@@ -2717,35 +2693,143 @@ object SimilarityOps {
       .select(col("probe_id"), col("neighbor_id"), col("adc_fp"), col("dist_fp"), col("rank"))
   }
 
-  /** The Lloyd loop over an (id, vfp) quantized relation: deterministic
-    * lowest-id seeding, argmin assignment, truncated-div means, empty
-    * clusters keep the prior centroid, localCheckpoint per round. The
-    * caller caches `v` — every iteration scans it.
+  /** The Lloyd fit over an `(id, vfp)` quantized relation — [[fitLloyd]]'s
+    * one-group case, returning `(cid, cfp)`. The caller caches `v`: every
+    * round scans it.
     */
-  private def lloyd(v: DataFrame, idCol: String, k: Int, iters: Int): DataFrame = {
+  private[graft] def lloyd(v: DataFrame, idCol: String, k: Int, iters: Int): DataFrame =
+    fitLloyd(v, idCol, None, "vfp", k, iters, None)
+
+  /** The Lloyd fit with centroids held in driver memory — at most k·dim
+    * longs per group of `groupCol` (one group when absent). Returns
+    * `(group, cid, cfp)`, or `(cid, cfp)`, as a local relation.
+    *
+    * Seeds are the k lowest ids per group (NULL ids first), from one job;
+    * `caps` `(group, cap)` lowers k per group, and a group absent from it
+    * gets no centroids. Each round is ONE job over `rel`: a task assigns
+    * each non-null vector to the nearest centroid of its group by
+    * [[graft.functions.L2SquaredFp]] (ties to the lowest cid; a NULL
+    * centroid's NULL distance orders first, as `min(struct(dist, cid))`
+    * orders it) and returns per-(group, cid, pos) sums, counts and
+    * non-null flags. The driver merges them: position pos is `sum div
+    * count` over the members that have it, NULL where all their elements
+    * are, and a centroid with no positioned member keeps its value. Sums
+    * use `Math.addExact`, so an overflow raises as ANSI `sum` does.
+    */
+  private def fitLloyd(
+      rel: DataFrame, idCol: String, groupCol: Option[String], vecCol: String,
+      k: Int, iters: Int, caps: Option[DataFrame]): DataFrame = {
     require(k >= 1, "k must be positive")
     require(iters >= 1, "need at least one iteration")
-    val seedW = Window.orderBy(col(idCol))
-    var centroids = v.orderBy(col(idCol)).limit(k)
-      .withColumn("cid", row_number().over(seedW).cast("long") - 1)
-      .select(col("cid"), col("vfp").as("cfp"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      // vectors re-join by id for the update so the argmin aggregate only
-      // ever shuffles (id, cid, dist) triples, never arrays
-      val means = assignFp(v, idCol, centroids).join(v, idCol)
-        .select(col("cid"), posexplode(col("vfp")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-        .select(col("cid"), col("pos"), expr("s div n").as("m"))
-        .groupBy(col("cid"))
-        .agg(DedupOps.bindOnce(sort_array(collect_list(struct(col("pos"), col("m"))))) { arr =>
-          transform(arr, e => e.getField("m"))
-        }.as("cfp_new"))
-      centroids = centroids.join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("cfp_new"), col("cfp")).as("cfp"))
-        .localCheckpoint()
+    groupCol.foreach(g => require(rel.schema(g).dataType == LongType, s"$g must be BIGINT"))
+    val rows = PlanBridge.internalRows(
+      rel.select(groupCol.fold(lit(0L))(col), col(idCol), col(vecCol)))
+    // a NULL cap does not cap, as `least(cap, k)` ignores it
+    val capOf = caps.map(_.collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) k.toLong else r.getLong(1))).toMap)
+    val seedLimit = (g: Long) =>
+      capOf.fold(k)(m => math.max(0L, math.min(k.toLong, m.getOrElse(g, 0L))).toInt)
+    val byId: Ordering[InternalRow] = new InterpretedOrdering(
+      Seq(SortOrder(BoundReference(1, rel.schema(idCol).dataType, nullable = true), Ascending)))
+    val seedRows = rows.mapPartitions { it =>
+      val lowest = mutable.HashMap.empty[Long, java.util.PriorityQueue[InternalRow]]
+      it.foreach { r =>
+        val n = if (r.isNullAt(0)) 0 else seedLimit(r.getLong(0))
+        if (n > 0) {
+          val q = lowest.getOrElseUpdate(r.getLong(0), new java.util.PriorityQueue(n, byId.reverse))
+          if (q.size < n) q.add(r.copy())
+          else if (byId.lt(r, q.peek())) { q.poll(); q.add(r.copy()) }
+        }
+      }
+      lowest.valuesIterator.flatMap(_.iterator.asScala)
+    }.collect()
+    var cents: Map[Long, Array[ArrayData]] = seedRows.groupBy(_.getLong(0)).map { case (g, rs) =>
+      g -> rs.sorted(byId).take(seedLimit(g)).map(r => if (r.isNullAt(2)) null else r.getArray(2).copy())
     }
-    centroids
+    for (_ <- 1 to iters) {
+      val cs = cents
+      val partials = rows.mapPartitions { it =>
+        val acc = mutable.HashMap.empty[(Long, Int), LloydSums]
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(2)) cs.get(r.getLong(0)).foreach { gc =>
+            val v = r.getArray(2)
+            acc.getOrElseUpdate((r.getLong(0), nearest(v, gc)), new LloydSums).add(v)
+          }
+        }
+        acc.iterator
+      }.collect()
+      val merged = partials.groupMapReduce(_._1)(_._2)(_ merge _)
+      cents = cs.map { case (g, gc) =>
+        g -> gc.indices.map(c => merged.get((g, c)).flatMap(_.mean).getOrElse(gc(c))).toArray
+      }
+    }
+    val fields = groupCol.map(rel.schema(_)).toSeq ++ Seq(
+      StructField("cid", LongType, nullable = false),
+      StructField("cfp", ArrayType(LongType, containsNull = true), rel.schema(vecCol).nullable))
+    val out = for {
+      (g, gc) <- cents.toSeq.sortBy(_._1)
+      (c, cid) <- gc.zipWithIndex
+    } yield Row.fromSeq(groupCol.map(_ => g).toSeq ++ Seq(cid.toLong,
+      if (c == null) null else (0 until c.numElements()).map(i => if (c.isNullAt(i)) null else c.getLong(i))))
+    rel.sparkSession.createDataFrame(out.asJava, StructType(fields))
+  }
+
+  /** The cid of `gc` nearest to the non-null vector `v`: the first minimum
+    * of `(dist, cid)`, where a NULL centroid's NULL distance is least.
+    */
+  private def nearest(v: ArrayData, gc: Array[ArrayData]): Int = {
+    var best = -1
+    var bestD = 0L
+    var c = 0
+    while (c < gc.length) {
+      if (gc(c) == null) return c
+      val d = graft.functions.L2SquaredFp.distance(v, gc(c))
+      if (best < 0 || d < bestD) { best = c; bestD = d }
+      c += 1
+    }
+    best
+  }
+
+  /** One cluster's per-position sums, member counts and non-null flags. */
+  private final class LloydSums extends Serializable {
+    private var sum = Array.emptyLongArray
+    private var n = Array.emptyLongArray
+    private var nonNull = Array.emptyBooleanArray
+
+    private def grow(len: Int): Unit = if (len > sum.length) {
+      sum = java.util.Arrays.copyOf(sum, len)
+      n = java.util.Arrays.copyOf(n, len)
+      nonNull = java.util.Arrays.copyOf(nonNull, len)
+    }
+
+    def add(v: ArrayData): Unit = {
+      grow(v.numElements())
+      var i = 0
+      while (i < v.numElements()) {
+        n(i) += 1
+        if (!v.isNullAt(i)) { sum(i) = Math.addExact(sum(i), v.getLong(i)); nonNull(i) = true }
+        i += 1
+      }
+    }
+
+    def merge(o: LloydSums): LloydSums = {
+      grow(o.sum.length)
+      for (i <- o.sum.indices) {
+        sum(i) = Math.addExact(sum(i), o.sum(i))
+        n(i) += o.n(i)
+        nonNull(i) |= o.nonNull(i)
+      }
+      this
+    }
+
+    /** The new centroid, or None when no member had a position. */
+    def mean: Option[ArrayData] =
+      if (sum.isEmpty) None
+      else {
+        val m = UnsafeArrayData.fromPrimitiveArray(
+          Array.tabulate(sum.length)(i => if (nonNull(i)) sum(i) / n(i) else 0L))
+        for (i <- sum.indices if !nonNull(i)) m.setNullAt(i)
+        Some(m)
+      }
   }
 }

@@ -204,7 +204,7 @@ class JobsBookkeepingSpec extends AnyFunSuite {
       val indexStore = quotes.filter(col("asset_type") === "STOCK").select(col("symbol"), col("price"),
         col("change").as("price_change"), col("percent_change"), col("high").as("price_high"),
         col("low").as("price_low"), lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("updated_at"))
-      assert(!Incremental.fullyCovered(symbols, indexStore, Seq("symbol")))
+      assert(!IncrementalSpec.fullyCovered(symbols, indexStore, Seq("symbol")))
       val fetched = Relational.renameProject(symbols.join(indexQuotes, Seq("symbol")), Seq(
         "symbol" -> "symbol", "regularMarketPrice" -> "price", "regularMarketChange" -> "price_change",
         "regularMarketChangePercent" -> "percent_change", "regularMarketDayHigh" -> "price_high",
@@ -226,7 +226,7 @@ class JobsBookkeepingSpec extends AnyFunSuite {
         .withColumn("total_batches", lit(0L))
         .withColumn("status", lit(status))
       val storedSymbols = symbols.join(indexStore, Seq("symbol"), "left_semi")
-      assert(Incremental.fullyCovered(storedSymbols, dupStore, Seq("symbol")))
+      assert(IncrementalSpec.fullyCovered(storedSymbols, dupStore, Seq("symbol")))
       assertSame(
         Jobs.indexUpdate(storedSymbols, dupStore, indexQuotes, now).completion,
         cached("complete_cached"),
