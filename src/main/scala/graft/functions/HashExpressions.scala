@@ -3,11 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native dedup-signature kernels as Catalyst expressions.
@@ -161,17 +164,140 @@ case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpr
     copy(child = newChild)
 }
 
+/** band_hashes(sig: array<long>, bands, rows) → array<long> of length
+  * `bands`: element b is `xxhash64(slice(sig, b·rows + 1, rows))` — Spark's
+  * array hash, a seed-42 fold of `XXH64.hashLong` over the slice's non-null
+  * elements (a slice past the end, or a NULL signature, hashes to the seed
+  * 42, as `xxhash64` of an empty or NULL array does). One loop over the
+  * signature instead of one interpreted lambda per band.
+  */
+case class BandHashes(child: Expression, bands: Int, rows: Int) extends UnaryExpression {
+  require(bands > 0 && rows > 0, "bands and rows must be positive")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"graft_band_hashes expects array<bigint>, got ${other.simpleString}")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_band_hashes"
+
+  override def eval(input: InternalRow): Any =
+    BandKernel.hashes(child.eval(input).asInstanceOf[ArrayData], bands, rows)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = child.genCode(ctx)
+    ev.copy(code = code"""
+       |${a.code}
+       |${CodeGenerator.javaType(dataType)} ${ev.value} = graft.functions.BandKernel.hashes(
+       |  ${a.isNull} ? null : ${a.value}, $bands, $rows);
+     """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Kernel of [[BandHashes]]. */
+object BandKernel {
+  def hashes(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
+    val n = if (sig == null) 0 else sig.numElements()
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = 42L
+      var i = b * rows
+      while (i < math.min(b * rows + rows, n)) {
+        if (!sig.isNullAt(i)) h = XXH64.hashLong(sig.getLong(i), h)
+        i += 1
+      }
+      out(b) = h
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+/** Kernel of [[NGramHashes]]. The items are laid out once as
+  * `t0 t1 … t(len−1)` in one byte buffer, so the space-joined gram j is the
+  * contiguous slice from the start of item j to the end of item j+n−1 and
+  * is hashed in place: no string is built per gram. Distinct grams are kept
+  * with a primitive open-address set, first occurrences in order. An array
+  * holding NULL items takes the per-gram `concatWs` path (concat_ws skips a
+  * NULL together with its separator, so no single layout serves every gram).
+  */
+object NGramKernel {
+  def hashes(a: ArrayData, n: Int, distinct: Boolean): ArrayData = {
+    val len = a.numElements()
+    if (len < n) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+    val out = new Array[Long](len - n + 1)
+    var hasNull = false
+    var k = 0
+    while (k < len && !hasNull) { hasNull = a.isNullAt(k); k += 1 }
+    if (!hasNull) {
+      val starts = new Array[Int](len + 1)
+      var total = 0
+      var i = 0
+      while (i < len) { starts(i) = total; total += a.getUTF8String(i).numBytes + 1; i += 1 }
+      starts(len) = total
+      val buf = new Array[Byte](total)
+      i = 0
+      while (i < len) {
+        a.getUTF8String(i).writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + starts(i))
+        buf(starts(i + 1) - 1) = ' '
+        i += 1
+      }
+      i = 0
+      while (i < out.length) {
+        val from = starts(i)
+        out(i) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET + from, starts(i + n) - 1 - from, 42L)
+        i += 1
+      }
+    } else {
+      val space = UTF8String.fromString(" ")
+      val parts = new Array[UTF8String](n)
+      var i = 0
+      while (i < out.length) {
+        var j = 0
+        while (j < n) { parts(j) = if (a.isNullAt(i + j)) null else a.getUTF8String(i + j); j += 1 }
+        val s = UTF8String.concatWs(space, parts: _*)
+        out(i) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
+        i += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(if (distinct) firstOccurrences(out) else out)
+  }
+
+  private def firstOccurrences(xs: Array[Long]): Array[Long] = {
+    val mask = Integer.highestOneBit(xs.length * 2 + 1) * 2 - 1
+    val keys = new Array[Long](mask + 1)
+    val used = new Array[Boolean](mask + 1)
+    val kept = new Array[Long](xs.length)
+    var k = 0
+    var i = 0
+    while (i < xs.length) {
+      val x = xs(i)
+      var slot = (java.lang.Long.hashCode(x * 0x9E3779B97F4A7C15L)) & mask
+      while (used(slot) && keys(slot) != x) slot = (slot + 1) & mask
+      if (!used(slot)) { used(slot) = true; keys(slot) = x; kept(k) = x; k += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(kept, k)
+  }
+}
+
 /** ngram_hashes(tokens: array<string>, n, distinct) → array<long>: the
   * xxhash64 (seed 42, Spark's default) of every n consecutive tokens joined
   * with a single space — byte-identical to the HOF build
   * `transform(sequence(1, size-n+1), i => xxhash64(concat_ws(" ", slice(toks,
-  * i, n))))`, including concat_ws's skip-null semantics, but as ONE codegen'd
-  * loop instead of an interpreted lambda tree per position (slice allocates
-  * an array, concat_ws and xxhash64 evaluate boxed, per element). With
-  * `distinct` the result keeps first occurrences in order, matching
-  * `array_distinct`. Fewer than n tokens → EMPTY array (not null): a short
-  * document has no n-grams, mirroring the `when(size >= n)` guard every HOF
-  * call site used.
+  * i, n))))`, including concat_ws's skip-null semantics, but as ONE native
+  * loop ([[NGramKernel]]) instead of an interpreted lambda tree per position
+  * (slice allocates an array, concat_ws and xxhash64 evaluate boxed, per
+  * element). With `distinct` the result keeps first occurrences in order,
+  * matching `array_distinct`. Fewer than n tokens → EMPTY array (not null):
+  * a short document has no n-grams, mirroring the `when(size >= n)` guard
+  * every HOF call site used.
   *
   * Serves every n-gram consumer on the hot path: shingle sets
   * (DedupOps.hashedShingles), trigram repetition and bigram shares
@@ -190,83 +316,12 @@ case class NGramHashes(child: Expression, n: Int, distinct: Boolean)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_ngram_hashes"
 
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val len = a.numElements()
-    if (len < n) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-    val space = UTF8String.fromString(" ")
-    val out = new Array[Long](len - n + 1)
-    val parts = new Array[UTF8String](n)
-    var i = 0
-    while (i <= len - n) {
-      var j = 0
-      while (j < n) {
-        parts(j) = if (a.isNullAt(i + j)) null else a.getUTF8String(i + j)
-        j += 1
-      }
-      val s = UTF8String.concatWs(space, parts: _*)
-      out(i) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-      i += 1
-    }
-    if (!distinct) UnsafeArrayData.fromPrimitiveArray(out)
-    else {
-      val seen = new java.util.HashSet[java.lang.Long]()
-      val buf = new Array[Long](out.length)
-      var k = 0
-      var m = 0
-      while (m < out.length) {
-        if (seen.add(out(m))) { buf(k) = out(m); k += 1 }
-        m += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(buf, k))
-    }
-  }
+  override def nullSafeEval(input: Any): Any =
+    NGramKernel.hashes(input.asInstanceOf[ArrayData], n, distinct)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val len = ctx.freshName("len")
-      val out = ctx.freshName("out")
-      val parts = ctx.freshName("parts")
-      val space = ctx.freshName("space")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val seen = ctx.freshName("seen")
-      val buf = ctx.freshName("buf")
-      val k = ctx.freshName("k")
-      val m = ctx.freshName("m")
-      val xxh = classOf[XXH64].getName
-      val utf8 = "org.apache.spark.unsafe.types.UTF8String"
-      val uad = "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData"
-      val dedup = if (!distinct) s"${ev.value} = $uad.fromPrimitiveArray($out);"
-      else s"""
-         |java.util.HashSet<Long> $seen = new java.util.HashSet<Long>();
-         |long[] $buf = new long[$out.length];
-         |int $k = 0;
-         |for (int $m = 0; $m < $out.length; $m++) {
-         |  if ($seen.add($out[$m])) $buf[$k++] = $out[$m];
-         |}
-         |${ev.value} = $uad.fromPrimitiveArray(java.util.Arrays.copyOf($buf, $k));
-       """.stripMargin
-      s"""
-         |int $len = $a.numElements();
-         |if ($len < $n) {
-         |  ${ev.value} = $uad.fromPrimitiveArray(new long[0]);
-         |} else {
-         |  $utf8 $space = $utf8.fromString(" ");
-         |  long[] $out = new long[$len - $n + 1];
-         |  $utf8[] $parts = new $utf8[$n];
-         |  for (int $i = 0; $i <= $len - $n; $i++) {
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      $parts[$j] = $a.isNullAt($i + $j) ? null : $a.getUTF8String($i + $j);
-         |    }
-         |    $utf8 $s = $utf8.concatWs($space, $parts);
-         |    $out[$i] = $xxh.hashUnsafeBytes($s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), 42L);
-         |  }
-         |  $dedup
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.NGramKernel.hashes($a, $n, $distinct);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -354,6 +409,10 @@ object HashFunctions {
   /** Column API for [[MinHashSignature]] (expects array<bigint>). */
   def graft_minhash_sig(hashes: Column, numHashes: Int): Column =
     ColumnBridge.column(MinHashSignature(ColumnBridge.expression(hashes), numHashes))
+
+  /** Column API for [[BandHashes]] (expects array<bigint>). */
+  def graft_band_hashes(sig: Column, bands: Int, rows: Int): Column =
+    ColumnBridge.column(BandHashes(ColumnBridge.expression(sig), bands, rows))
 
   /** Column API for [[NGramHashes]] (expects array<string>). */
   def graft_ngram_hashes(tokens: Column, n: Int, distinct: Boolean = false): Column =

@@ -70,9 +70,8 @@ object DedupOps {
     * (~|shingles|²/2⁶⁵ — negligible at any realistic corpus size).
     *
     * The build is the native [[graft.functions.NGramHashes]] kernel — one
-    * codegen'd loop per document; [[hashedShinglesHof]] keeps the
-    * interpreted HOF formulation as its differential baseline
-    * (DedupTextSpec pins bitwise equality).
+    * codegen'd loop per document; DedupTextSpec pins bitwise equality with
+    * the interpreted HOF formulation kept in test sources.
     */
   def hashedShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.select(
@@ -80,22 +79,6 @@ object DedupOps {
       graft.functions.HashFunctions
         .graft_ngram_hashes(TextOps.tokens(col(textCol)), n, distinct = true)
         .as("sh"))
-
-  /** Reference HOF formulation of [[hashedShingles]] (interpreted lambda per
-    * shingle position) — the differential baseline for the native kernel.
-    */
-  private[graft] def hashedShinglesHof(
-      df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(
-      col(idCol),
-      bindOnce(TextOps.tokens(col(textCol))) { toks =>
-        when(
-          size(toks) >= n,
-          array_distinct(transform(
-            sequence(lit(1), size(toks) - lit(n - 1)),
-            i => xxhash64(concat_ws(" ", slice(toks, i, lit(n)))))))
-          .otherwise(array().cast("array<bigint>"))
-      }.as("sh"))
 
   /** Candidate pairs sharing ≥1 bucket value, with the shared-bucket count.
     * Input: (id, bucket). Output: (doc_a, doc_b, common) with doc_a < doc_b.
@@ -781,48 +764,56 @@ object DedupOps {
         graft.functions.WinnowFunctions.graft_winnow(col(textCol), k, w).as("sh")),
       idCol, threshold, maxDocFreq)
 
-  /** Base 64-bit hash per shingle — computed ONCE per shingle; the per-
-    * permutation hashes are derived arithmetically from it.
-    */
-  def shingleHashes(sh: Column): Column = transform(sh, s => xxhash64(s))
-
   /** MinHash signature from pre-computed shingle hashes — the native
     * one-pass Catalyst kernel (graft.functions.MinHashSignature): permutation
-    * p takes `min over h of XXH64.hashLong(h, p)`. The HOF formulation
-    * ([[minhashSignatureHof]]) evaluates an interpreted lambda per
-    * (permutation × shingle); the native loop removes that overhead while
-    * keeping the same shape (k independent permutations of the base hashes).
+    * p takes `min over h of XXH64.hashLong(h, p)`, one codegen'd loop
+    * instead of an interpreted lambda per (permutation × shingle).
     */
   def minhashSignature(hashes: Column, numHashes: Int): Column =
     graft.functions.HashFunctions.graft_minhash_sig(hashes, numHashes)
 
-  /** Reference HOF formulation of the minhash signature (kept as the
-    * differential baseline for the native kernel; mixes with `xxhash64(h, i)`
-    * so values differ from [[minhashSignature]], but the min-of-permuted-
-    * hashes structure — and therefore LSH behavior — is the same).
+  /** Banded LSH buckets of a hashed-shingle relation `(idCol, sh)` (no
+    * empty sets): one `(idCol, bucket)` row per band of each document's
+    * `numHashes`-long MinHash signature, `bucket = struct(band, h)` with
+    * `h = xxhash64(slice(sig, band·rows + 1, rows))` computed by the native
+    * [[graft.functions.BandHashes]] kernel — a fixed-width key, equal
+    * exactly when the band index and the band's hash are. ONE definition
+    * for the self- and cross-corpus LSH variants, whose bucket encodings
+    * are contractually required to agree (a candidate can only form
+    * across sides if both sides bucket identically). Each document emits
+    * each band once, so the rows are distinct per (id, bucket) by
+    * construction.
     */
-  def minhashSignatureHof(hashes: Column, numHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(hashes, h => xxhash64(h, i))))
+  private def bandBuckets(sh: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val sig = minhashSignature(col("sh"), numHashes)
+    sh.select(col(idCol),
+        posexplode(graft.functions.HashFunctions.graft_band_hashes(sig, bands, numHashes / bands)))
+      .select(col(idCol), struct(col("pos").as("band"), col("col").as("h")).as("bucket"))
+  }
+
+  /** LSH candidate pairs of [[minhashLshPairs]]: (doc_a, doc_b, common)
+    * with doc_a < doc_b and `common` the number of shared bands.
+    */
+  private[graft] def lshCandidates(
+      sh: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame =
+    bucketPairs(bandBuckets(sh, idCol, numHashes, bands), idCol, "bucket")
+
+  /** LSH candidate pairs of [[crossMinhashLshPairs]]: distinct (doc_a, doc_b)
+    * with doc_a from `shA` and doc_b from `shB` sharing at least one band.
+    */
+  private[graft] def crossLshCandidates(
+      shA: DataFrame, shB: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame =
+    bandBuckets(shA, idCol, numHashes, bands).select(col(idCol).as("doc_a"), col("bucket"))
+      .join(bandBuckets(shB, idCol, numHashes, bands)
+        .select(col(idCol).as("doc_b"), col("bucket")), Seq("bucket"))
+      .select(col("doc_a"), col("doc_b")).distinct()
 
   /** MinHash+LSH near-dup pairs. Signature of `numHashes` minhashes split
     * into `bands` bands; documents sharing any band bucket become candidates;
     * candidates are verified with exact Jaccard ≥ threshold (so LSH only
     * affects recall, never precision).
     */
-  /** Banded bucket ids from a minhash signature — ONE definition for the
-    * self- and cross-corpus LSH variants, whose bucket encodings are
-    * contractually required to agree (a candidate can only form across
-    * sides if both sides bucket identically).
-    */
-  private def bandBuckets(sig: Column, bands: Int, rows: Int): Column =
-    explode(transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => concat(
-        b.cast("string"), lit(":"),
-        xxhash64(slice(sig, b * rows + 1, lit(rows))).cast("string"))))
-
   def minhashLshPairs(
       df: DataFrame,
       idCol: String,
@@ -831,19 +822,8 @@ object DedupOps {
       threshold: Double,
       numHashes: Int = 32,
       bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
     val sh = hashedShingles(df, idCol, textCol, n).filter(size(col("sh")) > 0).scopedCache()
-    // The cache() below is a correctness-of-cost barrier, not just reuse:
-    // without it Catalyst's CollapseProject inlines the signature expression
-    // into every band projection (16 signature recomputations per row).
-    val sig = sh
-      .select(col(idCol), minhashSignature(col("sh"), numHashes).as("sig"))
-      .scopedCache()
-    // band bucket = (band index, hash of the band's slice of the signature)
-    val banded = sig.select(col(idCol), bandBuckets(col("sig"), bands, rows).as("bucket"))
-      .distinct()
-    val candidates = bucketPairs(banded, idCol, "bucket").select(col("doc_a"), col("doc_b"))
+    val candidates = lshCandidates(sh, idCol, numHashes, bands).select(col("doc_a"), col("doc_b"))
     // verify candidates with exact Jaccard over the shingle sets
     val shA = sh.select(col(idCol).as("doc_a"), col("sh").as("sh_a"))
     val shB = sh.select(col(idCol).as("doc_b"), col("sh").as("sh_b"))
@@ -878,20 +858,9 @@ object DedupOps {
       threshold: Double,
       numHashes: Int = 32,
       bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
     val shA = hashedShingles(existing, idCol, textCol, n).filter(size(col("sh")) > 0).scopedCache()
     val shB = hashedShingles(incoming, idCol, textCol, n).filter(size(col("sh")) > 0).scopedCache()
-    // cache barrier per side, same as minhashLshPairs (CollapseProject
-    // would inline the signature into every band projection)
-    def banded(sh: DataFrame): DataFrame = sh
-      .select(col(idCol), minhashSignature(col("sh"), numHashes).as("sig"))
-      .scopedCache()
-      .select(col(idCol), bandBuckets(col("sig"), bands, rows).as("bucket"))
-      .distinct()
-    val candidates = banded(shA).select(col(idCol).as("doc_a"), col("bucket"))
-      .join(banded(shB).select(col(idCol).as("doc_b"), col("bucket")), Seq("bucket"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    val candidates = crossLshCandidates(shA, shB, idCol, numHashes, bands)
     candidates
       .join(shA.select(col(idCol).as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(shB.select(col(idCol).as("doc_b"), col("sh").as("sh_b")), "doc_b")

@@ -14,13 +14,16 @@ import Caching.Syntax
   */
 object TextOps {
 
-  /** Whitespace tokens of a (trimmed) text column. Empty/whitespace-only
-    * text yields an EMPTY array — `split(trim(""), "\s+")` alone returns
-    * `[""]`, a phantom 1-token artifact that would make empty documents
-    * pass `n_tokens == 0` filters and emit "" shingles.
+  /** Whitespace tokens of a text column: the maximal runs of characters
+    * outside `[ \t\n\u000B\f\r]` (Java's regex `\s`; U+00A0, U+3000 and
+    * other Unicode spaces do NOT split), via the native
+    * [[graft.functions.TextSplit]] kernel — bit-identical to
+    * `filter(split(trim(text), "\\s+"), _ =!= "")`, ill-formed UTF-8
+    * included (decoded with U+FFFD replacement, as `split` does). Empty or
+    * whitespace-only text yields an EMPTY array, never the phantom `[""]`
+    * a bare split returns; NULL text yields NULL.
     */
-  def tokens(text: Column): Column =
-    filter(split(trim(text), "\\s+"), t => t =!= "")
+  def tokens(text: Column): Column = graft.functions.SplitFunctions.graft_split(text)
 
   /** Whitespace-collapsed, lowercased, trimmed normalization. */
   def normalize(text: Column): Column =
@@ -2194,27 +2197,42 @@ object TextOps {
     * whitespace tokens as [[repetitionStats]]. Character accounting is
     * token-characters (separators excluded) — documented engine semantics,
     * replayed verbatim by the DuckDB oracle. Every metric is a pure
-    * per-document function computed by the [[graft.functions.RepetitionKernel]]
-    * in ONE codegen'd narrow projection — no explode, no shuffle; O(Σn·m)
-    * per document, flat per-row cost at any corpus size. Thresholds gate
+    * per-document function, so the stage is ONE narrow projection — no
+    * explode, no shuffle. [[gopherStats]] is native end to end: the
+    * [[graft.functions.TextSplit]] splitter builds the line,
+    * paragraph and token arrays, and the [[graft.functions.RepetitionKernel]]
+    * computes lines and paragraphs (n = 1) in one call each and ALL of
+    * n = 2..10 in a single fused call, O(|tokens|) per n with no per-gram
+    * string. Nothing on the path is an interpreted lambda. Thresholds gate
     * with STRICT `>` ("greater than", per the paper) via integer
     * cross-multiplication — no float division feeds `is_repetitive`.
     */
-  def gopherRepetition(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+  def gopherRepetition(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    gopherFractions(gopherStats(df, idCol, textCol), idCol)
+
+  /** The per-document statistics behind [[gopherRepetition]]:
+    * (idCol, l, p, g) — `l`/`p` the n = 1 stats of lines (split on `\n`,
+    * trimmed of ` \t\r`) and paragraphs (split on `\n\n`, trimmed of
+    * ` \t\r\n`), empties dropped; `g` = struct(g2..g10) over the
+    * lowercased whitespace tokens. Field meanings: [[graft.functions.RepetitionKernel]].
+    */
+  private[graft] def gopherStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import graft.functions.RepetitionFunctions.graft_rep_stats
+    import graft.functions.SplitFunctions.{graft_split, graft_well_formed}
     val t = coalesce(col(textCol), lit(""))
-    val lineArr = filter(
-      transform(split(t, "\n"), l => trim(l, " \t\r")), l => l =!= "")
-    val paraArr = filter(
-      transform(split(t, "\n\n"), p => trim(p, " \t\r\n")), p => p =!= "")
-    val tokArr = filter(split(normalize(t), " "), x => x =!= "")
-    val stats = df.select(
+    df.select(
       col(idCol),
-      graft_rep_stats(lineArr, 1).as("l"),
-      graft_rep_stats(paraArr, 1).as("p"),
-      DedupOps.bindOnce(tokArr) { w =>
-        struct((2 to 10).map(n => graft_rep_stats(w, n).as(s"g$n")): _*)
-      }.as("g"))
+      graft_rep_stats(graft_split(t, "\n", " \t\r"), 1, 1).getField("g1").as("l"),
+      graft_rep_stats(graft_split(t, "\n\n", " \t\r\n"), 1, 1).getField("g1").as("p"),
+      // the tokens of [[normalize]]: lowercasing before the whitespace
+      // collapse changes nothing, as whitespace is neither cased nor
+      // case-ignorable (no case mapping, final sigma included, reads across
+      // it); the JDK decode comes first, as in normalize's regexp_replace
+      graft_rep_stats(tokens(lower(graft_well_formed(t))), 2, 10).as("g"))
+  }
+
+  /** The 13 fractions and the `is_repetitive` gate over [[gopherStats]]. */
+  private[graft] def gopherFractions(stats: DataFrame, idCol: String): DataFrame = {
     def frac(num: Column, den: Column, nonEmpty: Column): Column =
       when(nonEmpty > 0, num.cast("double") / den.cast("double"))
     val l = col("l"); val p = col("p")

@@ -167,7 +167,7 @@ class DedupTextSpec extends AnyFunSuite {
     for (n <- Seq(1, 2, 3, 5)) {
       val native = graft.ops.DedupOps.hashedShingles(docs, "doc_id", "text", n)
         .as[(Long, Seq[Long])].collect().toMap
-      val hof = graft.ops.DedupOps.hashedShinglesHof(docs, "doc_id", "text", n)
+      val hof = TextReference.hashedShinglesHof(docs, "doc_id", "text", n)
         .as[(Long, Seq[Long])].collect().toMap
       assert(native == hof, s"n=$n diverged")
     }

@@ -338,16 +338,20 @@ class PlanContractSpec extends AnyFunSuite {
   /** Static plan + logical global windows for one registered query, with
     * AQE off so the physical plan is fully materialized at plan time.
     */
-  private def planOf(name: String): (String, Seq[LogicalWindow]) = {
+  private def planOf(name: String): (String, Seq[LogicalWindow]) = staticPlan(name) { df =>
+    val phys = df.queryExecution.executedPlan.toString
+    val globalWindows = df.queryExecution.optimizedPlan.collect {
+      case w: LogicalWindow if w.partitionSpec.isEmpty => w
+    }
+    (phys, globalWindows)
+  }
+
+  /** `f` over one registered query's relation, planned with AQE off. */
+  private def staticPlan[A](name: String)(f: org.apache.spark.sql.DataFrame => A): A = {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val df = SparkEntry.queries(name)(spark, TestSpark.sf0001)
-      val phys = df.queryExecution.executedPlan.toString
-      val globalWindows = df.queryExecution.optimizedPlan.collect {
-        case w: LogicalWindow if w.partitionSpec.isEmpty => w
-      }
-      (phys, globalWindows)
+      f(SparkEntry.queries(name)(spark, TestSpark.sf0001))
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prev)
       spark.catalog.clearCache()
@@ -415,6 +419,42 @@ class PlanContractSpec extends AnyFunSuite {
     // the partial aggregate must stay on the map side
     assert(shuffles("q_hash_features") == 1,
       "q_hash_features plans exactly the (doc, dim) aggregate exchange")
+  }
+
+  /** Interpreted expressions in a static physical plan, cached relations'
+    * plans included: the outermost `CodegenFallback` of each expression
+    * tree (a higher-order function with its lambdas, an imperative
+    * aggregate), with the names of the columns it reads.
+    */
+  private def interpreted(name: String): Seq[(String, Set[String])] = {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def outermost(e: Expression): Seq[Expression] = e match {
+      case f: CodegenFallback => Seq(f)
+      case _ => e.children.flatMap(outermost)
+    }
+    def expressions(plan: SparkPlan): Seq[Expression] = plan.collect {
+      case s: InMemoryTableScanExec => s.expressions ++ expressions(s.relation.cachedPlan)
+      case p => p.expressions
+    }.flatten
+    staticPlan(name) { df =>
+      expressions(df.queryExecution.executedPlan).flatMap(outermost)
+        .map(e => (e.prettyName, e.references.map(_.name).toSet))
+    }
+  }
+
+  test("curation text kernels run as generated code: nothing interpreted in q_gopher_repetition, " +
+    "only the posting-pair expansion in q_minhash_dedup") {
+    val gopher = interpreted("q_gopher_repetition")
+    assert(gopher.isEmpty, s"q_gopher_repetition plans interpreted expressions: $gopher")
+    // the posting lists (collect_set of ids per band bucket) and the
+    // lambdas expanding each list into pairs are the one interpreted stage
+    val minhash = interpreted("q_minhash_dedup")
+    assert(minhash.exists(_._2.contains("__ids")), s"posting-pair expansion not found: $minhash")
+    val stray = minhash.filterNot { case (fn, refs) => fn == "collect_set" || refs.contains("__ids") }
+    assert(stray.isEmpty, s"q_minhash_dedup plans interpreted expressions off the posting-pair path: $stray")
   }
 
   contracts.foreach { c =>
