@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated testdata (TESTDATA.md).
   *
@@ -15,8 +19,49 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The table `name` under `dir`, read with its memoized schema (see
+    * [[schemaOf]]), so a repeated read starts no schema-inference job.
+    */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private final case class SchemaKey(
+      files: Vector[(String, Long, Long)], settings: Vector[(String, String)])
+
+  /** path → (key, inferred schema); one entry per path, replaced when the
+    * key changes. The key holds values only, no session.
+    */
+  private val schemas = new ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per key:
+    * the table's files (path, length, mtime, from one listing) and the
+    * session's `*parquet*` SQL settings, which decide how the footers map
+    * to Spark types (`nanosAsLong` turns a ns timestamp into a long). A
+    * rewritten table or a flipped setting therefore infers again. A
+    * missing path raises Spark's own error.
+    */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return spark.read.parquet(path).schema
+    val files = Vector.newBuilder[(String, Long, Long)]
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val settings = spark.conf.getAll.filter(_._1.toLowerCase.contains("parquet")).toVector.sorted
+    val key = SchemaKey(files.result(), settings)
+    schemas.get(path) match {
+      case (k, schema) if k == key => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        schemas.put(path, (key, schema))
+        schema
+    }
+  }
 
   /** Normalized events relation: `ts` an instant-semantics TIMESTAMP and
     * `ts_ns` the epoch-nanosecond long, whatever the storage layout.

@@ -2,10 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.{ColumnBridge, NumericBridge}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native vector kernels as Catalyst expressions.
@@ -198,6 +199,61 @@ case class DotFp(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Fixed-point quantization of an array<double> vector, element x ↦
+  * `round(x * 1e6).cast("long")`: the `vfp` encoding the fixed-point
+  * similarity operators of [[graft.ops.SimilarityOps]] work in. One loop
+  * per array instead of a `transform` lambda interpreted per element, each
+  * step exactly as Spark's: the product in double; HALF_UP rounding through
+  * `BigDecimal.valueOf`, as `Round` does, with NaN and ±Inf passed through;
+  * then the double → long cast, which under ANSI (`ansi`, read from the
+  * session like `Cast`'s eval mode) raises on NaN, ±Inf and out-of-range
+  * values and otherwise truncates and saturates. NULL elements and a NULL
+  * array stay NULL.
+  */
+case class QuantizeFp(child: Expression, ansi: Boolean = SQLConf.get.ansiEnabled)
+    extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"graft_quantize_fp expects array<double>, got ${other.simpleString}")
+  }
+  override def dataType: DataType =
+    ArrayType(LongType, child.dataType.asInstanceOf[ArrayType].containsNull)
+  override def prettyName: String = "graft_quantize_fp"
+
+  override def nullSafeEval(input: Any): Any =
+    QuantizeFp.quantize(input.asInstanceOf[ArrayData], ansi)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a =>
+      s"${QuantizeFp.getClass.getName.stripSuffix("$")}.quantize($a, $ansi)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object QuantizeFp {
+
+  def quantize(a: ArrayData, ansi: Boolean): ArrayData = {
+    val n = a.numElements()
+    val out = UnsafeArrayData.createFreshArray(n, 8)
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) out.setNullAt(i)
+      else {
+        val x = a.getDouble(i) * 1000000.0
+        val r =
+          if (x.isNaN || x.isInfinite) x
+          else java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+        out.setLong(i, if (ansi) NumericBridge.doubleToLongExact(r) else r.toLong)
+      }
+      i += 1
+    }
+    out
+  }
+}
+
 object VectorFunctions {
   /** Column API for [[DotProduct]] (expects array<double> inputs). */
   def graft_dot(a: Column, b: Column): Column =
@@ -206,6 +262,12 @@ object VectorFunctions {
   /** Column API for [[L2SquaredFp]] (expects array<bigint> inputs). */
   def graft_l2sq(a: Column, b: Column): Column =
     ColumnBridge.column(L2SquaredFp(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** Column API for [[QuantizeFp]]: `vec`'s elements are cast to double
+    * first, as `x.cast("double")` would.
+    */
+  def graft_quantize_fp(vec: Column): Column =
+    ColumnBridge.column(QuantizeFp(ColumnBridge.expression(vec.cast("array<double>"))))
 
   /** Column API for [[DotFp]] (expects array<bigint> inputs). */
   def graft_dotfp(a: Column, b: Column): Column =

@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import Caching.Syntax
 
@@ -80,17 +82,6 @@ object DedupOps {
         .graft_ngram_hashes(TextOps.tokens(col(textCol)), n, distinct = true)
         .as("sh"))
 
-  /** Candidate pairs sharing ≥1 bucket value, with the shared-bucket count.
-    * Input: (id, bucket). Output: (doc_a, doc_b, common) with doc_a < doc_b.
-    */
-  /** Candidate pairs via posting lists: group ids per bucket, emit each
-    * bucket's id-combinations directly (ordered pairs a<b from the sorted
-    * list), then count shared buckets per pair. One shuffle on the bucket +
-    * one on the pair — strictly cheaper than the naive self-join, which
-    * shuffles the exploded relation twice and materializes the join
-    * intermediate. Hot buckets must be capped upstream (maxDocFreq) since a
-    * bucket of m docs emits m(m-1)/2 pairs — true of ANY pairing strategy.
-    */
   /** Drop elements whose document frequency exceeds `maxDocFreq` from an
     * exploded (id, s) element relation — THE df-cap block (strict `>`, the
     * boundary DedupTextSpec pins). One definition for every capped
@@ -107,6 +98,23 @@ object DedupOps {
       ex0.join(hot, Seq("s"), "left_anti")
     }
 
+  /** Candidate pairs sharing ≥1 bucket value, with the shared-bucket count.
+    * Input: (id, bucket). Output: (doc_a, doc_b, common) with doc_a < doc_b.
+    *
+    * Built from posting lists: group ids per bucket, emit each bucket's
+    * id-combinations directly (ordered pairs a<b from the sorted list), then
+    * count shared buckets per pair. The grouping is an object hash set per
+    * bucket and the expansion an interpreted lambda per list, so this pays
+    * off only where each bucket's document frequency is needed anyway: the
+    * capped ([[bucketPairsCapped]]) and anti-hot ([[bucketPairsAntiHot]])
+    * generators filter on `size(__ids)` before expanding. For LSH band
+    * buckets, almost all of which hold one document, [[lshCandidates]] uses
+    * a compiled self-join instead. The other uncapped callers (prefix-filter
+    * pairs, `LinkOps`, `ScaleSmoke`) still pair here; no benchmark workload
+    * measures them. Hot buckets must be capped upstream
+    * (maxDocFreq) since a bucket of m docs emits m(m-1)/2 pairs — true of
+    * ANY pairing strategy.
+    */
   private[graft] def bucketPairs(exploded: DataFrame, idCol: String, bucketCol: String): DataFrame =
     bucketPairsCapped(exploded, idCol, bucketCol, maxDocFreq = 0)
 
@@ -794,10 +802,28 @@ object DedupOps {
 
   /** LSH candidate pairs of [[minhashLshPairs]]: (doc_a, doc_b, common)
     * with doc_a < doc_b and `common` the number of shared bands.
+    *
+    * An equi-join of the band buckets with themselves on `bucket`, kept to
+    * doc_a < doc_b, then `count(1)` per pair: a join that AQE broadcasts at
+    * curation sizes (sort-merge beyond) and a hash aggregate, all generated
+    * code. Posting lists ([[bucketPairs]]) would build an object hash set
+    * per bucket, and with near-duplicates rare almost every band bucket
+    * holds one document and pairs nothing. The rows equal [[bucketPairs]]
+    * over the same buckets: the strict `<` drops self-pairs and NULL ids,
+    * as `collect_set` drops NULLs, and [[bandBuckets]] emits each
+    * (id, bucket) once, so a pair's join rows are its shared buckets.
     */
   private[graft] def lshCandidates(
-      sh: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame =
-    bucketPairs(bandBuckets(sh, idCol, numHashes, bands), idCol, "bucket")
+      sh: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame = {
+    val buckets = bandBuckets(sh, idCol, numHashes, bands)
+    // past the filter no id is NULL: declare it, so the schema stays non-null
+    def id(c: String): Column = ColumnBridge.column(KnownNotNull(ColumnBridge.expression(col(c)))).as(c)
+    buckets.select(col(idCol).as("doc_a"), col("bucket"))
+      .join(buckets.select(col(idCol).as("doc_b"), col("bucket")), Seq("bucket"))
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy(id("doc_a"), id("doc_b"))
+      .agg(count(lit(1)).as("common"))
+  }
 
   /** LSH candidate pairs of [[crossMinhashLshPairs]]: distinct (doc_a, doc_b)
     * with doc_a from `shA` and doc_b from `shB` sharing at least one band.

@@ -2379,10 +2379,7 @@ object SimilarityOps {
     assignFp(quantizeFp(vecs, idCol, vecCol), idCol, centroids)
 
   private def quantizeFp(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
-    vecs.select(
-      col(idCol),
-      transform(col(vecCol), x => round(x.cast("double") * lit(1000000.0)).cast("long"))
-        .as("vfp"))
+    vecs.select(col(idCol), graft.functions.VectorFunctions.graft_quantize_fp(col(vecCol)).as("vfp"))
 
   private def assignFp(v: DataFrame, idCol: String, cs: DataFrame): DataFrame = {
     // native codegen'd long loop (graft_l2sq) — the HOF formulation

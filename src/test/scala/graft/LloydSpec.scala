@@ -213,4 +213,63 @@ class LloydSpec extends AnyFunSuite {
       assert(pqJobs == 1 + iters, s"pqTrain, iters $iters")
     }
   }
+
+  /** (id, v) rows over a `v: array<elem>` column that may hold NULLs. */
+  private def arrays(rows: Seq[(Long, Seq[Any])], elem: DataType): DataFrame =
+    spark.createDataFrame(rows.map { case (id, v) => Row(id, v) }.asJava,
+      StructType(Seq(StructField("id", LongType, nullable = false),
+        StructField("v", ArrayType(elem, containsNull = true)))))
+
+  private def raisesCastOverflow(body: => Any): Boolean = {
+    val e = intercept[Throwable](body)
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("CAST_OVERFLOW"))
+  }
+
+  test("graft_quantize_fp == round(x.cast(double) * 1e6).cast(long) on both paths; NaN/Inf raise") {
+    import graft.functions.VectorFunctions.graft_quantize_fp
+    def quantized(df: DataFrame): DataFrame = df.select(col("id"), graft_quantize_fp(col("v")).as("vfp"))
+    def check(df: DataFrame, clue: String): Unit =
+      assertSameFit(quantized(df), RelationalLloyd.quantizeFp(df, "id", "v"), clue)
+    val rnd = new scala.util.Random(41L)
+    // HALF_UP ties at the sixth decimal, values one ulp off them, sub-unit
+    // values, signed zeros, magnitudes where the product is integral or
+    // close to the long range, the smallest double
+    val edges: Seq[Double] = Seq(0.5e-6, -0.5e-6, 1.5e-6, -1.5e-6, 2.5e-6, -2.5e-6,
+      Math.nextUp(0.5e-6), Math.nextDown(0.5e-6), 0.1234565, -0.1234565, 1e-7, -1e-7, 0.0, -0.0,
+      4503599627.3704995, 1e12, -1e12, 9.2233720368547e12, -9.2233720368547e12, Double.MinPositiveValue)
+    val random = Seq.fill(200)(
+      if (rnd.nextBoolean()) (rnd.nextInt(2000001) - 1000000 + 0.5) / 1e6 else rnd.nextGaussian() * 10)
+    val rows: Seq[(Long, Seq[Any])] =
+      edges.zipWithIndex.map { case (x, i) => (i.toLong, Seq(x)) } ++ Seq(
+        (100L, edges ++ random),
+        (101L, Seq(null, 0.5e-6, null, -2.5e-6)),
+        (102L, null),
+        (103L, Seq.empty),
+        (104L, Seq(null)))
+    TestSpark.onBothPaths {
+      check(arrays(rows, DoubleType), "array<double>")
+      check(arrays(rows.map { case (id, v) =>
+        (id, if (v == null) null else v.map(x => if (x == null) null else x.asInstanceOf[Double].toFloat))
+      }, FloatType), "array<float>")
+      // NaN and ±Inf pass round unchanged; the ANSI cast then raises, as it
+      // does for a product outside the long range
+      for (x <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1e13, -1e13)) {
+        val one = arrays(Seq((1L, Seq(0.25, x))), DoubleType)
+        assert(raisesCastOverflow(quantized(one).collect()), s"kernel on $x")
+        assert(raisesCastOverflow(RelationalLloyd.quantizeFp(one, "id", "v").collect()), s"reference on $x")
+      }
+    }
+    // without ANSI the cast saturates and NaN becomes 0, in both forms
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val outOfRange = arrays(Seq((1L, Seq(Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity, 1e13, -1e13, 0.25))), DoubleType)
+      assert(sortedRows(quantized(outOfRange)) ==
+        sortedRows(RelationalLloyd.quantizeFp(outOfRange, "id", "v")))
+      assert(quantized(outOfRange).head().getSeq[Long](1) ==
+        Seq(0L, Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue, 250000L))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
 }

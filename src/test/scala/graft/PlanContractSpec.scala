@@ -445,16 +445,15 @@ class PlanContractSpec extends AnyFunSuite {
     }
   }
 
-  test("curation text kernels run as generated code: nothing interpreted in q_gopher_repetition, " +
-    "only the posting-pair expansion in q_minhash_dedup") {
-    val gopher = interpreted("q_gopher_repetition")
-    assert(gopher.isEmpty, s"q_gopher_repetition plans interpreted expressions: $gopher")
-    // the posting lists (collect_set of ids per band bucket) and the
-    // lambdas expanding each list into pairs are the one interpreted stage
-    val minhash = interpreted("q_minhash_dedup")
-    assert(minhash.exists(_._2.contains("__ids")), s"posting-pair expansion not found: $minhash")
-    val stray = minhash.filterNot { case (fn, refs) => fn == "collect_set" || refs.contains("__ids") }
-    assert(stray.isEmpty, s"q_minhash_dedup plans interpreted expressions off the posting-pair path: $stray")
+  test("curation kernels run as generated code: nothing interpreted in q_gopher_repetition, " +
+    "q_minhash_dedup or q_kmeans, and no posting lists in q_minhash_dedup") {
+    for (q <- Seq("q_gopher_repetition", "q_minhash_dedup", "q_kmeans")) {
+      val found = interpreted(q)
+      assert(found.isEmpty, s"$q plans interpreted expressions: $found")
+    }
+    // LSH candidates are a bucket self-join, not collect_set posting lists
+    val (plan, _) = planOf("q_minhash_dedup")
+    assert(!plan.contains("collect_set"), s"q_minhash_dedup plans collect_set:\n$plan")
   }
 
   contracts.foreach { c =>

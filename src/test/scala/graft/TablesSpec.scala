@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -108,5 +113,85 @@ class TablesSpec extends AnyFunSuite {
     assert(
       sliced.select("event_id").collect().map(_.getLong(0)).toSet ==
         manual.select("event_id").collect().map(_.getLong(0)).toSet)
+  }
+
+  private lazy val jobsStarted: AtomicInteger = {
+    val n = new AtomicInteger()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    })
+    n
+  }
+
+  private def jobsOf(body: => Unit): Int = {
+    TestListenerBus.drain(spark.sparkContext)
+    val before = jobsStarted.get()
+    body
+    TestListenerBus.drain(spark.sparkContext)
+    jobsStarted.get() - before
+  }
+
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("schema memo: a repeated read of a table starts no Spark job") {
+    val dir = Files.createTempDirectory("graft-tables").toString
+    Seq((1L, "a")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    assert(jobsOf(Tables.documents(spark, dir)) >= 1, "the first read infers the schema")
+    assert(jobsOf(Tables.documents(spark, dir)) == 0, "the second read infers it again")
+    assert(Tables.documents(spark, dir).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
+  test("schema memo: a table rewritten with another schema is read with the new one") {
+    val dir = Files.createTempDirectory("graft-tables").toString
+    val path = s"$dir/documents.parquet"
+    Seq((1L, "a")).toDF("doc_id", "text").write.parquet(path)
+    assert(Tables.documents(spark, dir).columns.toSeq == Seq("doc_id", "text"))
+    Seq((2L, "b", 3)).toDF("doc_id", "lang", "n").write.mode("overwrite").parquet(path)
+    val df = Tables.documents(spark, dir)
+    assert(df.schema == spark.read.parquet(path).schema)
+    assert(df.columns.toSeq == Seq("doc_id", "lang", "n"))
+    assert(df.collect().toSeq.map(_.toSeq) == Seq(Seq(2L, "b", 3)))
+  }
+
+  test("schema memo: flipping nanosAsLong infers again (ns timestamps as longs, else Spark's error)") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // a nanosecond-timestamp parquet file, the layout `nanosAsLong` reads as longs
+    val dir = Files.createTempDirectory("graft-tables").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1705276800000000001L))
+    finally writer.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    def tsType(): DataType = Tables(spark, dir, "events").schema("ts").dataType
+    def batchTsType(): Either[String, DataType] =
+      scala.util.Try(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType)
+        .toEither.left.map(_.getClass.getName)
+    for (flag <- Seq("true", "false", "true")) withConf(key, flag) {
+      assert(scala.util.Try(tsType()).toEither.left.map(_.getClass.getName) == batchTsType(),
+        s"nanosAsLong=$flag")
+    }
+    assert(withConf(key, "true")(tsType()) == LongType)
+    assert(withConf(key, "true")(Tables(spark, dir, "events").as[(Long, Long)].head()) ==
+      (1L, 1705276800000000001L))
+  }
+
+  test("schema memo: every sf0.001 table's memoized schema is the inferred one") {
+    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+      for (t <- Tables.names) {
+        val path = s"${TestSpark.sf0001}/$t.parquet"
+        val inferred = spark.read.parquet(path).schema
+        assert(Tables.schemaOf(spark, path) == inferred, t)
+        assert(Tables(spark, TestSpark.sf0001, t).schema == inferred, t)
+      }
+    }
   }
 }

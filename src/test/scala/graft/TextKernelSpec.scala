@@ -22,6 +22,7 @@ import graft.ops.{DedupOps, TextOps}
 class TextKernelSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.onBothPaths
 
   private val words = Seq(
     "the", "cat", "sat", "on", "mat", "alpha", "bravo", "Zig", "ZAG", "a", "b",
@@ -74,25 +75,6 @@ class TextKernelSpec extends AnyFunSuite {
       .select((col("doc_id") + 30000L).as("doc_id"), unhex(col("hex")).cast("string").as("text"))
 
   private def allTexts(seed: Long): DataFrame = texts(seed).union(illFormed)
-
-  /** Run `body` twice: once with every expression interpreted (the small
-    * test relations fold into local relations through `eval`), and once with
-    * them kept as scans under whole-stage codegen with no fallback, so each
-    * kernel's generated code is what runs.
-    */
-  private def onBothPaths(body: => Unit): Unit =
-    Seq(
-      Map("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
-      Map("spark.sql.optimizer.excludedRules" ->
-          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
-        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
-    ).foreach { conf =>
-      val prev = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      try {
-        conf.foreach { case (k, v) => spark.conf.set(k, v) }
-        body
-      } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
 
   private def rowsOf(df: DataFrame): Map[Long, Row] =
     df.collect().map(r => r.getLong(0) -> r).toMap
@@ -214,6 +196,37 @@ class TextKernelSpec extends AnyFunSuite {
             xxhash64(slice(col("sig"), b * rows + 1, rows))): _*)),
           s"band hashes $bands x $rows")
       }
+    }
+  }
+
+  test("lshCandidates bucket join == posting lists over string buckets, common included: " +
+    "broadcast, sort-merge, 1 and 7 shuffle partitions, NULL id") {
+    val docs = allTexts(11L).union(Tables.documents(spark, TestSpark.sf0001)
+      .select(col("doc_id") + 100000L, col("text")))
+    val sh0 = DedupOps.hashedShingles(docs, "doc_id", "text", 3).filter(size(col("sh")) > 0)
+    // a NULL id sharing every band with a paired document: no pair may carry it
+    val paired = TextReference.lshCandidates(sh0, "doc_id", 32, 16).as[(Long, Long, Long)]
+      .collect().map(_._1).min
+    val sh = sh0.union(sh0.filter(col("doc_id") === paired)
+      .select(lit(null).cast("long").as("doc_id"), col("sh")))
+    val ref = TextReference.lshCandidates(sh, "doc_id", 32, 16)
+      .as[(Long, Long, Long)].collect().toSeq.sorted
+    assert(ref.exists(_._3 > 1), "the corpus yields pairs sharing several bands")
+    val runs = Seq(
+      "broadcast" -> (Map.empty[String, String], Some("BroadcastHashJoin")),
+      "sort-merge" -> (Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"), Some("SortMergeJoin")),
+      "1 partition" -> (Map("spark.sql.shuffle.partitions" -> "1"), None),
+      "7 partitions" -> (Map("spark.sql.shuffle.partitions" -> "7"), None))
+    for ((run, (conf, join)) <- runs) {
+      val prev = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      try {
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        val df = DedupOps.lshCandidates(sh, "doc_id", 32, 16)
+        val got = df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
+        assert(got == ref, s"$run: candidates differ from the posting-list reference")
+        assert(df.schema == TextReference.lshCandidates(sh, "doc_id", 32, 16).schema, s"$run: schema")
+        join.foreach(j => assert(df.queryExecution.executedPlan.toString.contains(j), s"$run: no $j planned"))
+      } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
   }
 
