@@ -3487,11 +3487,8 @@ object SparkEntry {
 
   /** 12-token lining + nav/footer boilerplate injection over a (doc_id,
     * text) relation — the construction the q_line_dedup oracle re-derives.
-    * Shared with ScaleSmoke's linededup section so the benchmark measures
-    * EXACTLY the oracle-checked workload (any drift would silently split
-    * them otherwise).
     */
-  private[graft] def boilerplateLinedDocs(docs: DataFrame): DataFrame = {
+  private def boilerplateLinedDocs(docs: DataFrame): DataFrame = {
     val lined = DedupOps.bindOnce(TextOps.tokens(col("text"))) { ts =>
       when(size(ts) === 0, lit(""))
         .otherwise(array_join(
@@ -3667,8 +3664,8 @@ object SparkEntry {
     * oracles. The MLlib-fitted variant stays available
     * ([[graft.ops.SimilarityOps.cosineNearDupPairsBlocked]], recall
     * spec-pinned); SimilaritySpec pins the fp form's recall against the
-    * exact O(n²) triangle, and ScaleSmoke measures sub-quadratic candidate
-    * growth.
+    * exact O(n²) triangle (sub-quadratic candidate growth was measured at
+    * `387020f`).
     */
   def qEmbeddingNeardupBlocked(spark: SparkSession, dir: String): DataFrame =
     SimilarityOps.cosineNearDupPairsBlockedFp(

@@ -82,22 +82,6 @@ object DedupOps {
         .graft_ngram_hashes(TextOps.tokens(col(textCol)), n, distinct = true)
         .as("sh"))
 
-  /** Drop elements whose document frequency exceeds `maxDocFreq` from an
-    * exploded (id, s) element relation — THE df-cap block (strict `>`, the
-    * boundary DedupTextSpec pins). One definition for every capped
-    * consumer ([[setJaccardPairs]], [[jaccardPairsPrefix]], ScaleSmoke,
-    * the specs) so the cap semantics cannot drift between the operators
-    * whose shared oracles assume they are identical.
-    */
-  private[graft] def cappedExploded(
-      ex0: DataFrame, idCol: String, maxDocFreq: Int): DataFrame =
-    if (maxDocFreq <= 0) ex0
-    else {
-      val hot = ex0.groupBy(col("s")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDocFreq).select(col("s"))
-      ex0.join(hot, Seq("s"), "left_anti")
-    }
-
   /** Candidate pairs sharing ≥1 bucket value, with the shared-bucket count.
     * Input: (id, bucket). Output: (doc_a, doc_b, common) with doc_a < doc_b.
     *
@@ -110,8 +94,8 @@ object DedupOps {
     * generators filter on `size(__ids)` before expanding. For LSH band
     * buckets, almost all of which hold one document, [[lshCandidates]] uses
     * a compiled self-join instead. The other uncapped callers (prefix-filter
-    * pairs, `LinkOps`, `ScaleSmoke`) still pair here; no benchmark workload
-    * measures them. Hot buckets must be capped upstream
+    * pairs, `LinkOps`) still pair here; no benchmark workload measures
+    * them. Hot buckets must be capped upstream
     * (maxDocFreq) since a bucket of m docs emits m(m-1)/2 pairs — true of
     * ANY pairing strategy.
     */
@@ -121,15 +105,15 @@ object DedupOps {
   /** [[bucketPairs]] with the df cap FUSED into the posting-list build: the
     * posting aggregation already materializes each bucket's distinct-id set,
     * so "document frequency > maxDocFreq" is just `size(__ids) > cap` — one
-    * predicate on the aggregate instead of [[cappedExploded]]'s separate
-    * df-count shuffle plus an anti-join back over the whole exploded
-    * relation. Same strict-`>` boundary (a bucket of exactly `maxDocFreq`
-    * documents survives), identical pairs and `common` counts for
-    * duplicate-free (id, bucket) input.
+    * predicate on the aggregate instead of a separate df-count shuffle plus
+    * an anti-join back over the whole exploded relation (the reference cap,
+    * `TextReference.cappedExploded`). Same strict-`>` boundary (a bucket of
+    * exactly `maxDocFreq` documents survives), identical pairs and `common`
+    * counts for duplicate-free (id, bucket) input.
     *
     * PRECONDITION: the exploded input must be duplicate-free on
     * (id, bucket). This variant counts df as the number of DISTINCT ids in
-    * a bucket (`size(collect_set)`), where [[cappedExploded]] counted
+    * a bucket (`size(collect_set)`), where the reference cap counts
     * ROWS — the two cap semantics agree only when the relation has one row
     * per (id, bucket). Every element-set producer in this module
     * guarantees that ([[shingles]]/[[hashedShingles]] are array_distinct,
@@ -312,8 +296,8 @@ object DedupOps {
     * Scale tradeoff vs full posting lists: one extra per-document ranking
     * window (a shuffle on the doc id) buys posting lists ~(1−t)× the
     * length — at t=0.9 only a tenth of each document's shingles are ever
-    * indexed. Measured on the ScaleSmoke replicated corpus (t=0.5,
-    * sf0.1×K): full-posting candidates grow 338k → 14.0M over K=1..8
+    * indexed. Measured at `387020f` on the sf0.1 corpus replicated K×
+    * (t=0.5): full-posting candidates grow 338k → 14.0M over K=1..8
     * (41×, super-linear — shared shingles compound) while prefix
     * candidates grow 68k → 717k (10.5×, tracking the 8× corpus) — 5% of
     * full at K=8 and diverging. Wall-clock (both forms cold-cache) still
@@ -337,7 +321,7 @@ object DedupOps {
     // ONE df pass serves both the cap and the rarest-first prefix order:
     // the inner join against the (small, ≤cap-filtered) per-element df
     // relation caps hot elements AND annotates survivors with `sdf` in the
-    // same step — the separate cappedExploded df-count + anti-join pass
+    // same step — a separate df-count + anti-join pass
     // over the widest relation in the plan is gone. Survivor df values are
     // identical either way (capping removes whole elements, never rows of
     // surviving ones).
@@ -347,15 +331,15 @@ object DedupOps {
     val ex = ex0.join(dfr, Seq("s"))
     // ONE groupBy(id) collects each document's df-annotated survivor set,
     // sorted rarest-first — the per-row sorted array replaces BOTH window
-    // passes of [[prefixCandidatePairsAnnotated]] (row_number + count over
+    // passes of the window formulation (row_number + count over
     // doc partitions: a shuffle plus a full sort of the exploded relation)
     // AND the separate csets groupBy: prefix = a slice of the array,
     // verify sets = a projection of it, one exchange for the pair. Same
     // total order (struct(sdf, s) sorts lexicographically = orderBy(sdf, s);
     // s is distinct per doc so the order is total), so the prefix SETS —
     // and therefore the candidates, the intersections and every output
-    // row — are identical; the spec-facing reference formulation in
-    // [[prefixCandidatePairs]] is unchanged.
+    // row — are identical (`TextReference.prefixCandidatePairs` keeps the
+    // window formulation as the spec's reference).
     val docsets = ex.groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("sdf"), col("s")))).as("__ss"))
       .scopedCache()
@@ -386,41 +370,10 @@ object DedupOps {
     * threshold t: nc − ceil(t·nc) + 1. Two sets with Jaccard ≥ t must
     * share an element within these prefixes (prefix-filtering bound).
     * The one definition both [[jaccardPairsPrefix]] and the spec-facing
-    * [[prefixCandidatePairsAnnotated]] use, so they cannot drift.
+    * `TextReference.prefixCandidatePairs` use, so they cannot drift.
     */
-  private def prefixLength(nc: Column, threshold: Double): Column =
+  private[graft] def prefixLength(nc: Column, threshold: Double): Column =
     nc - ceil(lit(threshold) * nc) + lit(1)
-
-  /** The distinct candidate pairs whose rarest-first prefixes intersect —
-    * split out so the spec can measure the candidate reduction against
-    * full posting lists.
-    */
-  private[graft] def prefixCandidatePairs(
-      ex: DataFrame,
-      idCol: String,
-      threshold: Double): DataFrame = {
-    val dfr = ex.groupBy(col("s")).agg(count(lit(1)).as("sdf"))
-    prefixCandidatePairsAnnotated(ex.join(dfr, Seq("s")), idCol, threshold)
-  }
-
-  /** [[prefixCandidatePairs]] over an already df-annotated (id, s, sdf)
-    * relation — the fused-cap path in [[jaccardPairsPrefix]] supplies the
-    * annotation from its single df pass.
-    */
-  private[graft] def prefixCandidatePairsAnnotated(
-      exd: DataFrame,
-      idCol: String,
-      threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wDoc = Window.partitionBy(col(idCol)).orderBy(col("sdf"), col("s"))
-    val wAll = Window.partitionBy(col(idCol))
-    val prefix = exd
-      .withColumn("pos", row_number().over(wDoc))
-      .withColumn("nc", count(lit(1)).over(wAll))
-      .filter(col("pos") <= prefixLength(col("nc"), threshold))
-      .select(col(idCol), col("s"))
-    bucketPairs(prefix, idCol, "s").select(col("doc_a"), col("doc_b"))
-  }
 
   /** Incremental (cross-corpus) near-dup pairs: exact Jaccard between a
     * NEW batch and an EXISTING corpus only — the dedup shape that matters
@@ -539,7 +492,7 @@ object DedupOps {
     // are duplicate-free element sets), so no union + df-count shuffle +
     // anti-joins back over the exploded relations. One-side-only elements
     // never join and never pair, so their cap status is irrelevant. Same
-    // strict-`>` boundary as [[cappedExploded]].
+    // strict-`>` boundary as `bucketPairsCapped`.
     val joined0 = pa.join(pb, Seq("s"))
     val pairs = expandCrossPostingPairs(hotOverride match {
       case Some(hot) => joined0.join(hot.select(col("s")), Seq("s"), "left_anti")
@@ -1139,26 +1092,6 @@ object DedupOps {
     * should use [[decontaminateBloomManaged]] and invoke its release handle
     * after materializing each result.
     */
-  /** The (cached distinct eval-gram relation, bloom filter) pair behind
-    * [[decontaminateBloom]] — factored so diagnostics (ScaleSmoke's
-    * cand_frac probe) measure EXACTLY the filter the operator runs with
-    * (sizing, hashing and fpp included); construction runs two eval-side
-    * jobs (the sizing count, then the distributed filter aggregate whose
-    * per-partition partials merge on the driver).
-    */
-  private[graft] def evalGramBloom(
-      eval: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      fpp: Double): (DataFrame, org.apache.spark.util.sketch.BloomFilter) = {
-    val evalGrams = hashedShingles(eval, idCol, textCol, n)
-      .select(explode(col("sh")).as("g")).distinct()
-      .scopedCache()
-    val bf = evalGrams.stat.bloomFilter("g", math.max(evalGrams.count(), 1L), fpp)
-    (evalGrams, bf)
-  }
-
   def decontaminateBloom(
       train: DataFrame,
       eval: DataFrame,
@@ -1182,7 +1115,12 @@ object DedupOps {
       textCol: String,
       n: Int = 8,
       fpp: Double = 0.01): (DataFrame, () => Unit) = {
-    val (evalGrams, bf) = evalGramBloom(eval, idCol, textCol, n, fpp)
+    val evalGrams = hashedShingles(eval, idCol, textCol, n)
+      .select(explode(col("sh")).as("g")).distinct()
+      .scopedCache()
+    // two eval-side jobs: the sizing count, then the distributed filter
+    // aggregate whose per-partition partials merge on the driver
+    val bf = evalGrams.stat.bloomFilter("g", math.max(evalGrams.count(), 1L), fpp)
     val spark = train.sparkSession
     val bfBc = spark.sparkContext.broadcast(bf)
     val release = () => { evalGrams.unpersist(); bfBc.destroy() }
@@ -2033,10 +1971,6 @@ object DedupOps {
       winnowPairs(df, idCol, textCol, threshold = candidateThreshold),
       df, idCol, textCol, n, threshold)
 
-  /** 64-bit SimHash of the document's distinct tokens: bit b of the result is
-    * set iff the sum over tokens of ±1 (by bit b of the token's xxhash64) is
-    * positive.
-    */
   /** 64-bit SimHash from pre-computed token hashes (bit b set iff the ±1
     * votes on bit b of the token hashes sum positive). Takes the hash ARRAY
     * column (materialize it in a projection first) so the token hashing runs
@@ -2044,27 +1978,6 @@ object DedupOps {
     */
   def simhashFromHashes(hashes: Column): Column =
     graft.functions.HashFunctions.graft_simhash(hashes)
-
-  /** Reference HOF formulation of the 64-bit simhash — bit-identical to the
-    * native kernel (checked in DedupTextSpec); kept as its differential
-    * baseline. 64 interpreted vote folds per document vs one native pass.
-    */
-  def simhashFromHashesHof(hashes: Column): Column = {
-    // variable-distance shifts need the SQL shiftright/shiftleft (the Scala
-    // helpers only take literal Int distances)
-    def shr(v: Column, n: Column): Column = call_function("shiftright", v, n.cast("int"))
-    def shl(v: Column, n: Column): Column = call_function("shiftleft", v, n.cast("int"))
-    aggregate(
-      sequence(lit(0), lit(63)),
-      lit(0L),
-      (acc, b) => {
-        val vote = aggregate(
-          hashes,
-          lit(0L),
-          (s, h) => s + shr(h, b).bitwiseAND(lit(1L)) * lit(2L) - lit(1L))
-        acc.bitwiseOR(when(vote > 0, shl(lit(1L), b)).otherwise(lit(0L)))
-      })
-  }
 
   /** md5 hex-fold 60-bit token hash — the KMV/CMS recipe
     * ([[graft.ops.Analytics.kmvSketch]]): parse the first 15 hex chars of

@@ -98,9 +98,9 @@ object GraphOps {
     * 2-core). After round R the alive set is a SUPERSET of the true
     * k-core that shrinks monotonically and reaches the exact fixpoint as
     * soon as one round removes nothing; bounded-round semantics exactly
-    * as [[labelPropagation]], with the spec/ScaleSmoke pinning
-    * convergence at shipped scale factors (round R−1 ≡ round R there, so
-    * the registered result IS the fixpoint). Peeling is monotone, so
+    * as [[labelPropagation]], with GraphOpsSpec pinning convergence on
+    * the shipped pair graph (round R−1 ≡ round R there, so the registered
+    * result IS the fixpoint). Peeling is monotone, so
     * rounds replay as oracle CTEs with no tie-break subtleties at all —
     * every step is a degree count and an integer comparison.
     *

@@ -13,6 +13,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 import Caching.Syntax
+import graft.functions.VectorFunctions.graft_quantize_fp
 
 /** Embedding similarity search (north-star extension): brute-force cosine
   * top-k as the exact baseline, IVF (inverted-file) partitioned search as the
@@ -376,7 +377,7 @@ object SimilarityOps {
     val v = col(vecCol).cast("array<double>")
     val vq = df.select(
       col(idCol), col(labelCol),
-      posexplode(transform(v, x => round(x * lit(1.0e6)).cast("long"))).as(Seq("dim", "q")))
+      posexplode(graft_quantize_fp(v)).as(Seq("dim", "q")))
     val cent = vq.groupBy(col(labelCol), col("dim"))
       .agg(sum(col("q")).as("sq"), count(lit(1)).as("cnt"))
       .groupBy(col(labelCol))
@@ -429,10 +430,9 @@ object SimilarityOps {
     * derive with [[centroidDriftFromSums]].
     */
   def centroidSums(df: DataFrame, vecCol: String, labelCol: String): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
     df.select(
       col(labelCol),
-      posexplode(transform(v, x => round(x * lit(1.0e6)).cast("long"))).as(Seq("dim", "q")))
+      posexplode(graft_quantize_fp(col(vecCol))).as(Seq("dim", "q")))
       .groupBy(col(labelCol), col("dim"))
       .agg(sum(col("q")).as("sq"), count(lit(1)).as("cnt"))
   }
@@ -653,8 +653,8 @@ object SimilarityOps {
     * list id also becomes the partitioning key so each list's pairing is
     * co-located). Raw vectors shuffle only in the final verify join on id,
     * sized by surviving candidates, not n². Recall on clustered corpora is
-    * pinned ≥ 0.9 in SimilaritySpec; sub-quadratic growth is measured in
-    * ScaleSmoke against the exact form.
+    * pinned ≥ 0.9 in SimilaritySpec; candidate growth stays sub-quadratic
+    * against the exact form (measured at `387020f`; see README).
     */
   def cosineNearDupPairsBlocked(
       corpus: DataFrame,
@@ -701,8 +701,9 @@ object SimilarityOps {
   }
 
   /** Candidate pairs of the blocked near-dup (before the exact-cosine
-    * verify) — exposed for ScaleSmoke, where the candidate count is the
-    * machine-independent scale metric (the exact form scores n(n-1)/2).
+    * verify) — the candidate count is the machine-independent scale metric
+    * (the exact form scores n(n-1)/2); SimilaritySpec's salted near-dup
+    * test compares against it.
     */
   private[graft] def blockedCandidates(
       corpus: DataFrame,
@@ -1210,7 +1211,7 @@ object SimilarityOps {
   private def quantizeNormFp(c: DataFrame, keyCol: String): DataFrame =
     c.select(
       col(keyCol),
-      transform(col("vn"), x => round(x * lit(1000000.0)).cast("long")).as("vfp"))
+      graft_quantize_fp(col("vn")).as("vfp"))
 
   /** Top-`nProbe` centroid lists per vector by integer squared-L2 (ties to
     * the lowest cid — the first-minimum rule): the multi-probe analogue of
@@ -1249,10 +1250,10 @@ object SimilarityOps {
     * key) pairs; per-level state is localCheckpointed like the
     * connected-components rounds. Verification is the same exact-cosine
     * join — salting affects recall only (pinned ≥0.95 on the skewed corpus
-    * in SimilaritySpec). Measured on the 50%-one-cluster generator
-    * (ScaleSmoke `neardupskew`, 2k→4k→8k vectors): flat-blocked candidates
-    * 450k→2.0M→10.0M (quadratic), salted 239k→604k→1.1M (≈linear, 9× less
-    * at 8k) at 99.5% pair recall.
+    * in SimilaritySpec, with sub-quadratic candidate growth). Measured at
+    * `387020f` on the 50%-one-cluster generator (2k→4k→8k vectors):
+    * flat-blocked candidates 450k→2.0M→10.0M (quadratic), salted
+    * 239k→604k→1.1M (≈linear, 9× less at 8k) at 99.5% pair recall.
     */
   def cosineNearDupPairsBlockedSalted(
       corpus: DataFrame,
@@ -1361,8 +1362,8 @@ object SimilarityOps {
     * search derives a static `list_id IN (…)` predicate, so the pruning
     * shows up in the scan, not just the join) — per-query-batch work is
     * the nProbe/nLists fraction of the corpus, while a brute scan re-reads
-    * everything every batch. ScaleSmoke's `knncross` section measures the
-    * crossover.
+    * everything every batch; SimilaritySpec pins the pruned scan (the
+    * brute/IVF crossover was measured at `387020f`).
     *
     * `fitFraction < 1` fits the k-means quantizer on a Bernoulli sample
     * and assigns the FULL corpus — the standard trick when the corpus is
@@ -1693,11 +1694,10 @@ object SimilarityOps {
       labelCol: String,
       kNeigh: Int): DataFrame = {
     require(kNeigh >= 1, "K must be positive")
-    def fp(v: Column) = transform(v, x => round(x.cast("double") * lit(1000000.0)).cast("long"))
     val t = train.select(
-      col(idCol), fp(col(vecCol)).as("vfp"), col(labelCol).cast("long").as("__y"))
+      col(idCol), graft_quantize_fp(col(vecCol)).as("vfp"), col(labelCol).cast("long").as("__y"))
     val p = probes.select(
-      col(idCol).as("__pid"), fp(col(vecCol)).as("__pv"),
+      col(idCol).as("__pid"), graft_quantize_fp(col(vecCol)).as("__pv"),
       col(labelCol).cast("long").as("__py"))
     val w = Window.partitionBy(col("__pid")).orderBy(col("__dist"), col(idCol))
     val wDesc = Window.partitionBy(col("__pid")).orderBy(col("__i").desc)
@@ -2379,7 +2379,7 @@ object SimilarityOps {
     assignFp(quantizeFp(vecs, idCol, vecCol), idCol, centroids)
 
   private def quantizeFp(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
-    vecs.select(col(idCol), graft.functions.VectorFunctions.graft_quantize_fp(col(vecCol)).as("vfp"))
+    vecs.select(col(idCol), graft_quantize_fp(col(vecCol)).as("vfp"))
 
   private def assignFp(v: DataFrame, idCol: String, cs: DataFrame): DataFrame = {
     // native codegen'd long loop (graft_l2sq) — the HOF formulation

@@ -2484,9 +2484,9 @@ object TextOps {
   /** [[bpeMergeList]] over an externally-maintained `(word, freq)`
     * relation — the operating split at scale: word counts are persisted
     * once per corpus version (one corpus pass, or a fold of per-batch
-    * counts), and training touches ONLY the bounded vocabulary. The
-    * ScaleSmoke `bpe` section measures exactly this: corpus K×, vocab
-    * constant → flat round cost.
+    * counts), and training touches ONLY the bounded vocabulary: corpus K×,
+    * vocab constant → flat round cost (measured at `387020f`).
+    * TextAnalysisSpec pins the batched rounds to the sequential ones.
     */
   def bpeTrainFromWordCounts(
       words: DataFrame, nMerges: Int,
@@ -3019,8 +3019,7 @@ object TextOps {
   /** [[wordpieceArtifact]] over an externally-maintained `(word, freq)`
     * relation — the same operating split as [[bpeTrainFromWordCounts]]:
     * ONE corpus pass builds the word counts, every training round is
-    * vocabulary-bounded (ScaleSmoke's `wordpiece` section measures the
-    * flatness).
+    * vocabulary-bounded (flat round cost measured at `387020f`).
     */
   def wordpieceTrainFromWordCounts(
       words: DataFrame,

@@ -761,10 +761,10 @@ object Streaming {
     * directory (`batch_id=<id>/{postings,sizes,labels}`) persists only the
     * batch's OWN posting bank, its own set sizes, and the label rows this
     * batch CHANGED (new docs included) — O(batch) bytes regardless of
-    * store size (measured in ScaleSmoke's `incrstore` section). The slot
-    * is staged dot-prefixed, committed by a single top-level marker after
-    * all three writes land, and promoted by atomic rename, so a crash
-    * anywhere leaves either no slot or the whole slot. The fold back is
+    * store size (pinned by StreamingDedupSpec's per-batch persistence
+    * test). The slot is staged dot-prefixed, committed by a single
+    * top-level marker after all three writes land, and promoted by atomic
+    * rename, so a crash anywhere leaves either no slot or the whole slot. The fold back is
     * exact because each relation is persisted in its monoid form: postings
     * add across disjoint-doc slots ([[graft.ops.DedupOps.mergeShingleBanks]]),
     * sizes union (slot id-sets are disjoint by the anti-join fence), and
@@ -798,11 +798,10 @@ object Streaming {
     * documents (the earlier formulation re-built the bank side's posting
     * lists from its (id, sh) sets every batch — O(bank) aggregation per
     * increment; the bank now stores the postings themselves, measured flat
-    * per-batch in ScaleSmoke's `incr` section). The bank is the one
-    * corpus-sized relation; at real scale it lives as the partitioned
-    * parquet store this class already writes (executor memory only ever
-    * holds the current version's scan), which is exactly the production
-    * posture.
+    * per-batch at `387020f`). The bank is the one corpus-sized relation;
+    * at real scale it lives as the partitioned parquet store this class
+    * already writes (executor memory only ever holds the current version's
+    * scan), which is exactly the production posture.
     */
   /** Maintained IVF VECTOR INDEX over a micro-batched embedding stream —
     * the similarity-search complement of [[NearDupClusterStream]]: as

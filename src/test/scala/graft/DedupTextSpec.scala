@@ -156,7 +156,7 @@ class DedupTextSpec extends AnyFunSuite {
     val both = hs.select(
       col("doc_id"),
       DedupOps.simhashFromHashes(col("hs")).as("native"),
-      DedupOps.simhashFromHashesHof(col("hs")).as("hof"))
+      TextReference.simhashFromHashes(col("hs")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.count() == docs.count())
   }
@@ -787,12 +787,12 @@ class DedupTextSpec extends AnyFunSuite {
 
     // candidate accounting on the same capped exploded relation
     val sh = DedupOps.hashedShingles(docs, "doc_id", "text", 3)
-    val ex = DedupOps.cappedExploded(
+    val ex = TextReference.cappedExploded(
       sh.select(col("doc_id"), explode(col("sh")).as("s")), "doc_id", 100).cache()
     val fullCand = ex.as("a").join(ex.as("b"), Seq("s"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
-    val prefCand = DedupOps.prefixCandidatePairs(ex, "doc_id", 0.5).count()
+    val prefCand = TextReference.prefixCandidatePairs(ex, "doc_id", 0.5).count()
     assert(prefCand < fullCand,
       s"prefix candidates $prefCand should undercut full posting candidates $fullCand")
     info(s"candidates: full=$fullCand prefix=$prefCand (${100 * prefCand / fullCand}%)")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, Round}
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -424,10 +425,9 @@ class PlanContractSpec extends AnyFunSuite {
   /** Interpreted expressions in a static physical plan, cached relations'
     * plans included: the outermost `CodegenFallback` of each expression
     * tree (a higher-order function with its lambdas, an imperative
-    * aggregate), with the names of the columns it reads.
+    * aggregate).
     */
-  private def interpreted(name: String): Seq[(String, Set[String])] = {
-    import org.apache.spark.sql.catalyst.expressions.Expression
+  private def interpreted(name: String): Seq[Expression] = {
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -439,21 +439,31 @@ class PlanContractSpec extends AnyFunSuite {
       case s: InMemoryTableScanExec => s.expressions ++ expressions(s.relation.cachedPlan)
       case p => p.expressions
     }.flatten
-    staticPlan(name) { df =>
-      expressions(df.queryExecution.executedPlan).flatMap(outermost)
-        .map(e => (e.prettyName, e.references.map(_.name).toSet))
-    }
+    staticPlan(name) { df => expressions(df.queryExecution.executedPlan).flatMap(outermost) }
   }
+
+  /** Each expression's name with the names of the columns it reads. */
+  private def describe(es: Seq[Expression]): Seq[(String, Set[String])] =
+    es.map(e => (e.prettyName, e.references.map(_.name).toSet))
 
   test("curation kernels run as generated code: nothing interpreted in q_gopher_repetition, " +
     "q_minhash_dedup or q_kmeans, and no posting lists in q_minhash_dedup") {
     for (q <- Seq("q_gopher_repetition", "q_minhash_dedup", "q_kmeans")) {
       val found = interpreted(q)
-      assert(found.isEmpty, s"$q plans interpreted expressions: $found")
+      assert(found.isEmpty, s"$q plans interpreted expressions: ${describe(found)}")
     }
     // LSH candidates are a bucket self-join, not collect_set posting lists
     val (plan, _) = planOf("q_minhash_dedup")
     assert(!plan.contains("collect_set"), s"q_minhash_dedup plans collect_set:\n$plan")
+  }
+
+  test("fixed-point quantization runs as the native kernel: no interpreted Round in " +
+    "q_class_outliers, q_embedding_drift, q_knn_shapley or q_embedding_neardup_blocked") {
+    for (q <- Seq("q_class_outliers", "q_embedding_drift", "q_knn_shapley",
+        "q_embedding_neardup_blocked")) {
+      val rounding = interpreted(q).filter(_.exists(_.isInstanceOf[Round]))
+      assert(rounding.isEmpty, s"$q rounds inside interpreted expressions: ${describe(rounding)}")
+    }
   }
 
   contracts.foreach { c =>

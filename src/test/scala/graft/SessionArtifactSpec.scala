@@ -43,16 +43,32 @@ class SessionArtifactSpec extends AnyFunSuite {
     assert(rows() == before)
   }
 
-  test("src/main builds a SparkSession in exactly one place: GraftSession") {
+  /** Every main Scala source as (path relative to src/main/scala, text). */
+  private def mainSources(): Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root, not ${Paths.get("").toAbsolutePath}")
-    val builder = java.util.regex.Pattern.quote("SparkSession.builder()")
-    val hits: Seq[Path] = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-      .flatMap { f =>
-        val n = Files.readString(f).split(builder, -1).length - 1
-        Seq.fill(n)(root.relativize(f))
-      }
+      .map(f => (root.relativize(f), Files.readString(f)))
+  }
+
+  test("src/main builds a SparkSession in exactly one place: GraftSession") {
+    val builder = java.util.regex.Pattern.quote("SparkSession.builder()")
+    val hits: Seq[Path] = mainSources().flatMap { case (f, text) =>
+      Seq.fill(text.split(builder, -1).length - 1)(f)
+    }
     assert(hits == Seq(Paths.get("graft/GraftSession.scala")))
+  }
+
+  test("src/main has exactly four entry points: Bench, Verify, tools.Explain, tools.TimeQueries") {
+    val pkg = """(?m)^package\s+([\w.]+)""".r
+    val obj = """(?m)^\s*object\s+(\w+)""".r
+    val mains = mainSources().flatMap { case (_, text) =>
+      val p = pkg.findFirstMatchIn(text).map(_.group(1) + ".").getOrElse("")
+      """\bdef\s+main\(""".r.findAllMatchIn(text).map { m =>
+        p + obj.findAllMatchIn(text.substring(0, m.start)).map(_.group(1)).toSeq.last
+      }
+    }
+    assert(mains.sorted == Seq("graft.Bench", "graft.Verify", "graft.tools.Explain", "graft.tools.TimeQueries"))
   }
 }

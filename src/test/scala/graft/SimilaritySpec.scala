@@ -278,9 +278,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("cosineNearDupPairsBlocked: recall >= 0.9 vs exact on clustered vectors, exact sims, canonical pairs") {
-    // same clustered regime as the SRP-LSH spec AND ScaleSmoke's measured
-    // benchmark (one shared generator): near-dup pairs are cluster-mates,
-    // the case coarse-quantizer blocking is built for
+    // same clustered regime as the SRP-LSH spec and README's blocked
+    // near-dup scale figures (one shared generator): near-dup pairs are
+    // cluster-mates, the case coarse-quantizer blocking is built for
     val vecs = graft.tools.SyntheticVectors
       .clustered(nClusters = 10, perCluster = 20, dim = 16, seed = 11, stride = 20L)
       .toDF("vec_id", "embedding")

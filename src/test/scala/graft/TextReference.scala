@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.DataType
@@ -63,6 +64,57 @@ object TextReference {
             i => xxhash64(concat_ws(" ", slice(toks, i, lit(n)))))))
           .otherwise(array().cast("array<bigint>"))
       }.as("sh"))
+
+  /** Drop elements whose document frequency exceeds `maxDocFreq` from an
+    * exploded (id, s) element relation, counting df as ROWS (strict `>`):
+    * the separate df-count + anti-join cap that `DedupOps.bucketPairsCapped`
+    * and `DedupOps.jaccardPairsPrefix` fuse into their own df pass.
+    */
+  def cappedExploded(ex0: DataFrame, idCol: String, maxDocFreq: Int): DataFrame =
+    if (maxDocFreq <= 0) ex0
+    else {
+      val hot = ex0.groupBy(col("s")).agg(count(lit(1)).as("df"))
+        .filter(col("df") > maxDocFreq).select(col("s"))
+      ex0.join(hot, Seq("s"), "left_anti")
+    }
+
+  /** The distinct candidate pairs whose rarest-first prefixes intersect, as
+    * two windows per document (rank by (df, element), then count): the
+    * formulation `DedupOps.jaccardPairsPrefix` replaced with one sorted
+    * array per document, kept so the spec can measure the candidate
+    * reduction against full posting lists.
+    */
+  def prefixCandidatePairs(ex: DataFrame, idCol: String, threshold: Double): DataFrame = {
+    val dfr = ex.groupBy(col("s")).agg(count(lit(1)).as("sdf"))
+    val wDoc = Window.partitionBy(col(idCol)).orderBy(col("sdf"), col("s"))
+    val wAll = Window.partitionBy(col(idCol))
+    val prefix = ex.join(dfr, Seq("s"))
+      .withColumn("pos", row_number().over(wDoc))
+      .withColumn("nc", count(lit(1)).over(wAll))
+      .filter(col("pos") <= DedupOps.prefixLength(col("nc"), threshold))
+      .select(col(idCol), col("s"))
+    DedupOps.bucketPairs(prefix, idCol, "s").select(col("doc_a"), col("doc_b"))
+  }
+
+  /** `DedupOps.simhashFromHashes` as 64 interpreted vote folds per
+    * document instead of one native pass.
+    */
+  def simhashFromHashes(hashes: Column): Column = {
+    // variable-distance shifts need the SQL shiftright/shiftleft (the Scala
+    // helpers only take literal Int distances)
+    def shr(v: Column, n: Column): Column = call_function("shiftright", v, n.cast("int"))
+    def shl(v: Column, n: Column): Column = call_function("shiftleft", v, n.cast("int"))
+    aggregate(
+      sequence(lit(0), lit(63)),
+      lit(0L),
+      (acc, b) => {
+        val vote = aggregate(
+          hashes,
+          lit(0L),
+          (s, h) => s + shr(h, b).bitwiseAND(lit(1L)) * lit(2L) - lit(1L))
+        acc.bitwiseOR(when(vote > 0, shl(lit(1L), b)).otherwise(lit(0L)))
+      })
+  }
 
   /** Band buckets as `"<band>:<xxhash64 of the band's slice>"` strings. */
   def bandBuckets(sig: Column, bands: Int, rows: Int): Column =

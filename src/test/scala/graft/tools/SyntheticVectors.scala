@@ -1,11 +1,11 @@
 package graft.tools
 
-/** Deterministic clustered-Gaussian vector corpus — ONE definition shared by
-  * ScaleSmoke (which measures the blocked near-dup on it) and the similarity
-  * specs (which pin recall on it), so the measured benchmark and the recall
-  * guarantees provably exercise the same regime: well-separated centers
-  * (σ=3 per dim) with tight per-point noise (σ=0.05), ids `c·stride + i`.
-  * A calibration change here moves both the numbers and the pins together.
+/** Deterministic clustered-Gaussian vector corpora — ONE definition shared
+  * by the similarity specs (which pin recall on it), so every recall
+  * guarantee exercises the same regime: well-separated centers (σ=3 per
+  * dim) with tight per-point noise (σ=0.05), ids `c·stride + i`. The
+  * blocked near-dup scale figures in README were measured on the same
+  * corpora (at `387020f`).
   */
 object SyntheticVectors {
   def clustered(
@@ -20,17 +20,7 @@ object SyntheticVectors {
       yield (c * stride + i, centers(c).map(_ + rng.nextGaussian() * 0.05).toSeq)
   }
 
-  /** Skewed corpus for the ONE-GIANT-CLUSTER regime: half the points form a
-    * single DIFFUSE direction cluster (per-point noise σ=1 around a σ=3
-    * center — non-twin pairs inside it sit near cos ≈ 0.9, below a 0.99
-    * near-dup threshold), built as twin pairs (σ=0.01 within a pair →
-    * planted near-dups at sim ≈ 1, ids 2i/2i+1); the other half spreads
-    * over tight cold clusters with the [[clustered]] calibration (offset by
-    * 10⁷ so id spaces never collide). Flat k-means blocking funnels the
-    * diffuse half into one quadratic list; the salted blocking must
-    * subdivide it while keeping every twin pair co-blocked.
-    */
-  /** Twin-pair corpus over UNIFORM directions — the sf1 smoke's regime:
+  /** Twin-pair corpus over UNIFORM directions — the whale-list routing regime:
     * structureless in direction space (no clusters for Lloyd to find),
     * which is exactly where lowest-id seeding + few iterations leave
     * REALIZED whale lists even under population-proportional capacity
@@ -50,6 +40,16 @@ object SyntheticVectors {
     }
   }
 
+  /** Skewed corpus for the ONE-GIANT-CLUSTER regime: half the points form a
+    * single DIFFUSE direction cluster (per-point noise σ=1 around a σ=3
+    * center — non-twin pairs inside it sit near cos ≈ 0.9, below a 0.99
+    * near-dup threshold), built as twin pairs (σ=0.01 within a pair →
+    * planted near-dups at sim ≈ 1, ids 2i/2i+1); the other half spreads
+    * over tight cold clusters with the [[clustered]] calibration (offset by
+    * 10⁷ so id spaces never collide). Flat k-means blocking funnels the
+    * diffuse half into one quadratic list; the salted blocking must
+    * subdivide it while keeping every twin pair co-blocked.
+    */
   def skewedOneCluster(
       nTwinPairs: Int,
       nColdClusters: Int,
