@@ -2,11 +2,15 @@ package graft.jobs
 
 import java.sql.Date
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
 import org.apache.spark.sql.types._
 
 import graft.ops._
@@ -14,21 +18,25 @@ import graft.ops._
 /** The three reference job pipelines (SURVEY.md §3), composed from graft.ops
   * operators as pure batch functions: request relation in → (updated store,
   * completion payload) out. The "fetch" step — an HTTP call in the reference —
-  * is a join against a quotes/series feed DataFrame (tests feed parquet; a
-  * live deployment would plug a DataSource V2 HTTP source, SURVEY.md §2.A A3).
+  * reads a quotes/series feed DataFrame for the keys the job plans (tests
+  * feed parquet; a live deployment would plug a DataSource V2 HTTP source,
+  * SURVEY.md §2.A A3).
   *
   * Request-bounded work runs on the driver, like the reference's own loops
   * over the request list (`fetch_historical_market_data.py:191-215`). A job
   * collects its request list once, reads the store's rows for the requested
-  * keys with ONE semi-join against that local list, decides what to fetch
-  * in driver memory — rule B7 of `Incremental.needingUpdate`, the B9
-  * cache-first guard (every requested key stored) and B10 of
+  * keys with ONE filter of the store by an `InSet` of those keys, decides
+  * what to fetch in driver memory — rule B7 of `Incremental.needingUpdate`,
+  * the B9 cache-first guard (every requested key stored) and B10 of
   * `gapDetection`, which `JobsBookkeepingSpec` checks the jobs against —
-  * and fetches with a join against the local plan. Request-level scalars
-  * (`now`, the month window) are evaluated once on the driver, so no
-  * per-request literal reaches generated code: a request's generated
-  * classes are the previous request's, which Spark's generated-class cache
-  * can serve.
+  * and fetches with an `InSet` filter of the feed by the keys (or, for the
+  * historical job, the key-months) it plans. No request-bounded relation is
+  * joined to distributed data, so no request broadcasts a local relation:
+  * each probe and fetch is one Spark job. Request-level scalars (`now`, the
+  * month window) are evaluated once on the driver, and an `InSet`'s key set
+  * is a reference object of its generated class, so no per-request literal
+  * reaches generated code: a request's generated classes are the previous
+  * request's, which Spark's generated-class cache can serve.
   *
   * Pin contract: a live feed is nondeterministic, so every output of a job
   * (store, completion, per-batch payloads) describes ONE evaluation of its
@@ -84,30 +92,69 @@ object Jobs {
   private def scalars(spark: SparkSession, cols: Column*): DataFrame =
     local(spark, StructType(Nil), Seq(Row())).select(cols: _*)
 
-  /** Evaluates a request-bounded relation ONCE and pins its rows in a local
-    * relation; returns the rows too, for driver-side bookkeeping.
+  /** `keys` IN `tuples`, as ONE `InSet`: its set is a reference object, so
+    * the generated class is the same whatever the number of tuples, where
+    * `isin` inlines up to ten literals. One string key probes a hash set;
+    * several probe an ordered set of `struct(keys)`. A tuple holding a NULL
+    * is dropped, so a NULL key never matches, as in a join.
     */
-  private def pinLocal(df: DataFrame): (Seq[Row], DataFrame) = {
-    val rows = df.collect().toSeq
-    (rows, local(df.sparkSession, df.schema, rows))
+  private def keyIn(keys: Seq[Column], tuples: Iterable[Row]): Column = {
+    val one = keys.size == 1
+    val set = tuples.filterNot(_.anyNull).map(t => if (one) t.get(0) else t)
+    ColumnBridge.column(InSet(ColumnBridge.expression(if (one) keys.head else struct(keys: _*)),
+      set.map(CatalystTypeConverters.convertToCatalyst).toSet))
   }
 
-  /** [[pinLocal]] for a fetch, with the job's clock `now` evaluated once on
-    * the driver and attached as `updated_at`.
+  /** The store's rows whose `keys` are among `tuples`, projected to `cols`:
+    * one Spark job. Bounded by the request for a store keyed on `keys`.
     */
-  private def pinFetch(fetched: DataFrame, now: Column): (Seq[Row], DataFrame) = {
-    val clock = scalars(fetched.sparkSession, now.as("updated_at"))
+  private def storedFor(store: DataFrame, keys: Seq[String], tuples: Seq[Row], cols: Column*): Seq[Row] =
+    store.filter(keyIn(keys.map(col), tuples)).select(cols: _*).collect().toSeq
+
+  /** The fetch of `needed` request rows (schema `request`) from `feed`,
+    * evaluated ONCE, with the job's clock `now` evaluated once on the
+    * driver and attached as `updated_at`: rows and their local relation.
+    *
+    * The feed's rows for the needed keys come from one [[keyIn]] filter,
+    * and the join to `needed` on `keys` runs on the driver: a request row
+    * gets every feed row of its key, so a key requested twice gets its
+    * rows twice, as the join did. The key fields are the request's, as a
+    * join's using columns are.
+    */
+  private def pinFetch(request: StructType, needed: Seq[Row], keys: Seq[String], feed: DataFrame,
+      now: Column): (Seq[Row], DataFrame) = {
+    val spark = feed.sparkSession
+    def keyOf(schema: StructType): Row => Row = {
+      val idx = keys.map(schema.fieldIndex)
+      r => Row.fromSeq(idx.map(r.get))
+    }
+    val neededKeys = needed.map(keyOf(request))
+    val byKey = feed.filter(keyIn(keys.map(col), neededKeys)).collect().toSeq.groupBy(keyOf(feed.schema))
+    val clock = scalars(spark, now.as("updated_at"))
     val at = clock.head().get(0)
-    val rows = fetched.collect().toSeq.map(r => Row.fromSeq(r.toSeq :+ at))
-    (rows, local(fetched.sparkSession, fetched.schema.add(clock.schema.head), rows))
+    val rows = neededKeys.flatMap(byKey.getOrElse(_, Nil)).map(r => Row.fromSeq(r.toSeq :+ at))
+    val schema = StructType(feed.schema.map(f => if (keys.contains(f.name)) request(f.name) else f))
+    (rows, local(spark, schema.add(clock.schema.head), rows))
   }
 
-  /** The store's rows whose `keys` a (local) request relation names,
-    * projected to `cols`: a semi-join that broadcasts the request side.
-    * Bounded by the request for a store keyed on `keys`.
+  /** EXCLUDED-wins upsert of freshly fetched rows: an explicit source
+    * priority (fresh=1 > store=0) first, like historicalBackfill, since
+    * `updated_at` alone can TIE (a stored row from a retried run carries the
+    * same pinned `now`). Every fresh row carries that same `now`, so the
+    * value columns follow as tiebreakers: two quotes the feed delivers for
+    * one key resolve the same way whatever the delivery order or
+    * partitioning (Merge.lastWins' total-order contract).
     */
-  private def storedFor(store: DataFrame, requested: DataFrame, keys: Seq[String], cols: Column*): Seq[Row] =
-    store.join(requested, keys, "left_semi").select(cols: _*).collect().toSeq
+  private def upsertFresh(store: DataFrame, fresh: DataFrame, keys: Seq[String]): DataFrame =
+    Merge.upsert(
+      store.withColumn("__src", lit(0)),
+      fresh.withColumn("__src", lit(1)),
+      keys,
+      ("__src" +: "updated_at" +: fresh.columns.filterNot(c => keys.contains(c) || c == "updated_at")).map(col)
+    ).drop("__src")
+
+  /** The first day of `c`'s month, as a date. */
+  private def monthOf(c: Column): Column = to_date(date_trunc("month", c))
 
   /** Reference batch count for a single final message of `n` records, 100
     * per batch (`fetch_market_data.py:93`, `fetch_market_index_data.py:171`).
@@ -115,7 +162,7 @@ object Jobs {
   private def batchesOf100(n: Long): Long = (n + 99) / 100
 
   /** §3.1 MARKET_DATA_UPDATE_REQUEST: anti-join update planning → fetch
-    * (join) → required-field validation → last-wins upsert → completion.
+    * (key filter) → required-field validation → last-wins upsert → completion.
     */
   def marketDataUpdate(
       requests: DataFrame, // (symbol, asset_type)
@@ -123,21 +170,14 @@ object Jobs {
       quotes: DataFrame,   // feed with RequiredFields columns
       now: Column): JobResult = {
     val spark = store.sparkSession
-    val (requested, requestFrame) = pinLocal(requests.select(SnapshotKeys.map(col): _*))
+    val request = requests.select(SnapshotKeys.map(col): _*)
+    val requested = request.collect().toSeq
     // B7: the request rows whose key the store lacks (a NULL key never
-    // matches, so it is "needed" and then drops out of the fetch join)
-    val stored = storedFor(store, requestFrame, SnapshotKeys, SnapshotKeys.map(col): _*).toSet
-    val needed = local(spark, requestFrame.schema, requested.filterNot(stored))
-    val (rows, valid) = pinFetch(
-      Relational.filterValid(needed.join(quotes, SnapshotKeys), RequiredFields), now)
-    // EXCLUDED-wins via explicit source priority (fresh=1 > store=0), like
-    // historicalBackfill: ordering by updated_at alone can TIE (a stored
-    // row from a retried run carries the same pinned `now`), making the
-    // winner arbitrary where the reference's ON CONFLICT is deterministic
-    val updated = Merge.upsert(
-      store.withColumn("__src", lit(0)),
-      valid.withColumn("__src", lit(1)),
-      SnapshotKeys, Seq(col("__src"), col("updated_at"))).drop("__src")
+    // matches, so it is "needed" and then drops out of the fetch)
+    val stored = storedFor(store, SnapshotKeys, requested, SnapshotKeys.map(col): _*).toSet
+    val (rows, valid) = pinFetch(request.schema, requested.filterNot(stored), SnapshotKeys,
+      Relational.filterValid(quotes, RequiredFields), now)
+    val updated = upsertFresh(store, valid, SnapshotKeys)
     // the job's asset identity is the composite key — a symbol listed under
     // two asset types is two assets, like the reference's len(assets) over
     // (symbol, asset_type) request entries (both keys are non-null: valid)
@@ -150,8 +190,8 @@ object Jobs {
   }
 
   /** §3.2 HISTORICAL_MARKET_DATA_REQUEST: coverage scan → month-gap
-    * detection → range-bounded fetch (join) → monthly last-close upsert
-    * keyed (symbol, date, asset_type) → completion.
+    * detection → range-bounded fetch (key-month filter) → monthly
+    * last-close upsert keyed (symbol, date, asset_type) → completion.
     */
   def historicalBackfill(
       requests: DataFrame, // (symbol, asset_type)
@@ -168,34 +208,27 @@ object Jobs {
     // (Incremental.monthSpine) — minus the months the store covers; one
     // [gap_start, gap_end] fetch span per key with a hole (range
     // coalescing, fetch_utils.py:231)
-    val bounds = scalars(spark,
-      to_date(date_trunc("month", start)), to_date(date_trunc("month", stop))).head()
-    val months =
+    val bounds = scalars(spark, monthOf(start), monthOf(stop)).head()
+    val spine =
       if (bounds.anyNull) Nil
       else Iterator.iterate(bounds.getDate(0).toLocalDate)(_.plusMonths(1))
-        .takeWhile(!_.isAfter(bounds.getDate(1).toLocalDate)).toSeq
-    val spine = local(spark,
-      StructType(keyCols.map(StructField(_, StringType)) :+ StructField("month", DateType)),
-      for ((t, s) <- keys; m <- months) yield Row(t, s, Date.valueOf(m)))
-    // the spine rides as data, not as literals, so the coverage scan's
-    // generated code is the same for every request
-    val covered = storedFor(
-      store.withColumn("month", to_date(date_trunc("month", col("date")))),
-      spine, keyCols :+ "month", (keyCols :+ "month").map(col): _*).toSet
-    val gaps = local(spark,
-      StructType(keyCols.map(StructField(_, StringType)) ++
-        Seq(StructField("gap_start", DateType), StructField("gap_end", DateType))),
-      keys.flatMap { case (t, s) =>
-        val missing = months.map(Date.valueOf).filterNot(m => covered(Row(t, s, m)))
-        missing.headOption.map(Row(t, s, _, missing.last))
-      })
+        .takeWhile(!_.isAfter(bounds.getDate(1).toLocalDate)).map(Date.valueOf).toSeq
+    val covered = storedFor(store.withColumn("month", monthOf(col("date"))), keyCols :+ "month",
+      for ((t, s) <- keys; m <- spine) yield Row(t, s, m), (keyCols :+ "month").map(col): _*).toSet
+    // each key's [gap_start, gap_end] span as its spine cells: a feed row
+    // whose (key, month) is a cell is exactly one with datetime in
+    // [gap_start, add_months(gap_end, 1))
+    val cells = keys.flatMap { case (t, s) =>
+      val missing = spine.indices.filterNot(i => covered(Row(t, s, spine(i))))
+      if (missing.isEmpty) Nil else spine.slice(missing.head, missing.last + 1).map(Row(t, s, _))
+    }
     // over-fetch each span, then collapse via upsert. Pinned ONCE
-    // (distributed: it scales with history length, not with the request)
+    // (distributed: it scales with history length, not with the request).
+    // The symbol's hash probe goes first, so only the requested symbols'
+    // rows compute their month and probe the cells
     val fetched = series
-      .join(gaps, keyCols)
-      .filter(
-        col("datetime") >= col("gap_start") &&
-          col("datetime") < add_months(col("gap_end"), 1))
+      .filter(keyIn(Seq(col("symbol")), cells.map(c => Row(c.get(1)))) &&
+        keyIn(Seq(col("asset_type"), col("symbol"), monthOf(col("datetime"))), cells))
       .localCheckpoint(true)
     // ONE window does both the monthly last-close and the upsert. EXCLUDED-
     // wins (ON CONFLICT DO UPDATE SET price = EXCLUDED.price,
@@ -212,15 +245,23 @@ object Jobs {
       store.withColumn("__src", lit(0)).withColumn("datetime", lit(null).cast("timestamp")),
       fetched.select(
         col("symbol"), col("asset_type"),
-        to_date(date_trunc("month", col("datetime"))).as("date"),
+        monthOf(col("datetime")).as("date"),
         col("close").as("price"), col("datetime"), lit(1).as("__src")),
       Seq("symbol", "asset_type", "date"),
       Seq(col("__src"), col("datetime"), col("price"))).drop("__src", "datetime")
     // record counts are over FETCHED rows (the reference's len(data) /
     // total_record_count), not the collapsed monthly rows — a month with 30
-    // daily feed rows counts 30 fetched records but stores one row
-    val fetchedPerKey = fetched.groupBy(keyCols.map(col): _*).count().collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    // daily feed rows counts 30 fetched records but stores one row. ONE job:
+    // each task counts its rows per key (non-null: they matched a cell)
+    val fetchedPerKey = PlanBridge.internalRows(fetched.select(keyCols.map(col): _*))
+      .mapPartitions { it =>
+        val n = mutable.HashMap.empty[(String, String), Long]
+        it.foreach { r =>
+          val k = (r.getUTF8String(0).toString, r.getUTF8String(1).toString)
+          n(k) = n.getOrElse(k, 0L) + 1
+        }
+        n.iterator
+      }.collect().groupMapReduce(_._1)(_._2)(_ + _)
     // per-batch completion events (publish-inside-the-loop,
     // fetch_historical_market_data.py:207-213): requested symbols batched
     // 50 per asset type, one payload row per batch with the batch's symbol
@@ -280,9 +321,9 @@ object Jobs {
       r.copy(store = r.store.localCheckpoint(true))
     } catch {
       case NonFatal(_) =>
-        val (_, requested) = pinLocal(requests.select(col("symbol")))
+        val requested = requests.select(col("symbol")).collect().toSeq
         JobResult(store, cachedCompletion(store.sparkSession,
-          storedFor(store, requested, Seq("symbol"), col("symbol")), "stale_fallback"))
+          storedFor(store, Seq("symbol"), requested, col("symbol")), "stale_fallback"))
     }
 
   /** B15 — retry-queue partition: split a fetch-attempt relation into
@@ -341,7 +382,7 @@ object Jobs {
   }
 
   /** §3.3 MARKET_INDEX_DATA_UPDATE_REQUEST: cache-first short-circuit →
-    * batched fetch (join) → rename projection → single-key upsert →
+    * batched fetch (key filter) → rename projection → single-key upsert →
     * completion; on a failed/empty fetch the cached rows are re-emitted
     * (stale-on-error fallback).
     */
@@ -351,11 +392,12 @@ object Jobs {
       quotes: DataFrame,   // feed (symbol, regularMarketPrice, …)
       now: Column): JobResult = {
     val spark = store.sparkSession
-    val (requested, requestFrame) = pinLocal(requests.select(col("symbol")))
+    val request = requests.select(col("symbol"))
+    val requested = request.collect().toSeq
     // the request's stored rows: both the B9 cache-first test (every
     // requested symbol stored) and, when it holds, the cached answer's
     // counts
-    val stored = storedFor(store, requestFrame, Seq("symbol"), col("symbol"))
+    val stored = storedFor(store, Seq("symbol"), requested, col("symbol"))
     if (requested.forall(stored.toSet)) {
       // B9: everything cached — re-emit existing rows, no fetch
       JobResult(store, cachedCompletion(spark, stored, "complete_cached"))
@@ -364,8 +406,8 @@ object Jobs {
       // outputs (store AND completion) must describe the SAME evaluation
       // — without this, a caller materializing them separately could see
       // a completion that doesn't count the rows actually upserted
-      val (rows, fetched) = pinFetch(Relational.renameProject(
-        requestFrame.join(quotes, Seq("symbol")),
+      val (rows, fetched) = pinFetch(request.schema, requested, Seq("symbol"), Relational.renameProject(
+        quotes,
         Seq(
           "symbol" -> "symbol",
           "regularMarketPrice" -> "price",
@@ -373,11 +415,7 @@ object Jobs {
           "regularMarketChangePercent" -> "percent_change",
           "regularMarketDayHigh" -> "price_high",
           "regularMarketDayLow" -> "price_low")), now)
-      // EXCLUDED-wins via source priority — updated_at can tie on retries
-      val updated = Merge.upsert(
-        store.withColumn("__src", lit(0)),
-        fetched.withColumn("__src", lit(1)),
-        Seq("symbol"), Seq(col("__src"), col("updated_at"))).drop("__src")
+      val updated = upsertFresh(store, fetched, Seq("symbol"))
       val n = rows.size.toLong
       val symbols = rows.map(_.getString(fetched.schema.fieldIndex("symbol"))).distinct.size.toLong
       JobResult(updated, local(spark, IndexCompletion,

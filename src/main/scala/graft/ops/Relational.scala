@@ -49,12 +49,10 @@ object Relational {
   def renameProject(df: DataFrame, mapping: Seq[(String, String)]): DataFrame =
     df.select(mapping.map { case (from, to) => col(from).as(to) }: _*)
 
-  /** B3 — type coercion. API documents deliver numerics as strings and dates
-    * as `yyyy-MM-dd` strings; coerce with `cast`, which Catalyst folds into
-    * the projection (no UDF).
+  /** B3 — type coercion. API documents deliver numerics as strings; coerce
+    * with `cast`, which Catalyst folds into the projection (no UDF).
     */
   def coerceDouble(c: Column): Column = c.cast("double")
-  def coerceDate(c: Column): Column   = to_date(c, "yyyy-MM-dd")
 
   /** B4 — asset-type dispatch. The reference's STOCK/CRYPTO/FOREX switch with
     * unknown-type skip becomes an `isin` filter plus a `when` routing column;

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 /** JDBC upsert sink — the deploy seam for the reference's Postgres
@@ -11,10 +13,13 @@ import org.apache.spark.sql.functions.col
   * INSERT when no row matched — in one transaction per partition over
   * executor-local connections.
   *
-  * Correctness under parallelism: the frame is repartitioned by the key
-  * columns first, so a given key is written by exactly ONE task and the
-  * update-then-insert pair can never race itself across partitions (no
-  * cross-partition deadlocks, no duplicate-key insert races). That
+  * Correctness under parallelism: a given key is written by exactly ONE
+  * task, so the update-then-insert pair can never race itself across
+  * partitions (no cross-partition deadlocks, no duplicate-key insert
+  * races). A frame whose planned input is one partition already has that
+  * property and is written as it is, by one task; any other frame (more
+  * partitions, or a plan with an exchange, whose partition count is only
+  * known once it runs) is repartitioned by the key columns first. That
   * one-task-per-key claim does NOT cover two attempts of the SAME task —
   * speculative execution, or a retried task racing its zombie, can put two
   * copies of one partition in flight at once, and both can observe
@@ -34,11 +39,11 @@ import org.apache.spark.sql.functions.col
   *
   * Scale shape: one connection + one prepared-statement pair per partition,
   * rows streamed (never materialized); the only data movement is the key
-  * repartition. At warehouse scale a set-based `MERGE INTO` from a staged
-  * temp table amortizes round trips further — same contract, swap the
-  * per-row loop; the row loop is the reference-parity form and works on any
-  * JDBC target (tested against in-process Derby, the sandbox stand-in for
-  * Postgres).
+  * repartition, which a one-partition frame skips. At warehouse scale a
+  * set-based `MERGE INTO` from a staged temp table amortizes round trips
+  * further — same contract, swap the per-row loop; the row loop is the
+  * reference-parity form and works on any JDBC target (tested against
+  * in-process Derby, the sandbox stand-in for Postgres).
   *
   * Identifiers are double-quoted verbatim in the generated SQL, so `table`,
   * `keyCols` and `valueCols` must match the DDL case exactly.
@@ -194,8 +199,17 @@ object JdbcUpsert {
     val insertSql =
       s"INSERT INTO ${q(table)} (${cols.map(q).mkString(", ")}) " +
         s"VALUES (${cols.map(_ => "?").mkString(", ")})"
-    df.select(cols.map(col): _*)
-      .repartition(keyCols.map(col): _*)
+    val planned = df.select(cols.map(col): _*)
+    // one partition already has every key in one task (Spark's
+    // SinglePartition). Counted on the planned RDD, since a checkpointed
+    // input reports no partitioning, and only when the plan has no exchange
+    // or subquery: then it is not adaptive, so the count is final, and
+    // building its RDD runs no job
+    val onePartition = !planned.queryExecution.executedPlan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case p => p.subqueries.nonEmpty
+    } && planned.queryExecution.toRdd.getNumPartitions == 1
+    (if (onePartition) planned else planned.repartition(keyCols.map(col): _*))
       .foreachPartition { (it: Iterator[Row]) =>
         if (it.hasNext) {
           val conn = java.sql.DriverManager.getConnection(url)

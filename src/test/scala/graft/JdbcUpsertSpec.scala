@@ -1,9 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkFootprint.{jobsOf, plansOf}
 import graft.sources.JdbcUpsert
 
 /** The JDBC upsert round trip ACTUALLY TAKEN against an in-process Derby
@@ -19,7 +26,11 @@ class JdbcUpsertSpec extends AnyFunSuite {
   private val keyCols = Seq("symbol", "asset_type")
   private val valCols = Seq("price", "change")
 
-  private def withTable[A](name: String)(body: String => A): A = {
+  /** `body` over a fresh table; without `primaryKey` the database cannot
+    * catch a key written twice, so only the sink's one-task-per-key rule
+    * keeps it to one row.
+    */
+  private def withTable[A](name: String, primaryKey: Boolean = true)(body: String => A): A = {
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
@@ -29,22 +40,32 @@ class JdbcUpsertSpec extends AnyFunSuite {
            |  "symbol" VARCHAR(32) NOT NULL,
            |  "asset_type" VARCHAR(16) NOT NULL,
            |  "price" DOUBLE,
-           |  "change" DOUBLE,
-           |  PRIMARY KEY ("symbol", "asset_type"))""".stripMargin)
+           |  "change" DOUBLE${if (primaryKey) """,
+           |  PRIMARY KEY ("symbol", "asset_type")""" else ""})""".stripMargin)
       st.close()
       body(name)
     } finally conn.close()
   }
 
-  private def readAll(name: String): Set[(String, String, Double, Double)] = {
+  private def readAll(name: String): Set[(String, String, Double, Double)] = readRows(name).toSet
+
+  private def readRows(name: String): Seq[(String, String, Double, Double)] = {
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val rs = conn.createStatement().executeQuery(
         s"""SELECT "symbol", "asset_type", "price", "change" FROM "$name"""")
-      val buf = scala.collection.mutable.Set.empty[(String, String, Double, Double)]
+      val buf = Seq.newBuilder[(String, String, Double, Double)]
       while (rs.next()) buf += ((rs.getString(1), rs.getString(2), rs.getDouble(3), rs.getDouble(4)))
-      buf.toSet
+      buf.result()
     } finally conn.close()
+  }
+
+  private def exchanges(plans: Seq[SparkPlan]): Seq[Exchange] =
+    plans.flatMap(SparkFootprint.collect(_) { case e: Exchange => e })
+
+  private def keyShuffled(plans: Seq[SparkPlan]): Boolean = exchanges(plans).exists {
+    case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[HashPartitioning]
+    case _ => false
   }
 
   test("upsertBatch: insert-new + update-existing on the composite key (reference ON CONFLICT)") {
@@ -96,6 +117,48 @@ class JdbcUpsertSpec extends AnyFunSuite {
         df.withColumn("price", col("price") + 1000000.0), url, t, keyCols, valCols)
       val after = readAll(t)
       assert(after.size == n && after.forall(_._3 >= 1000000.0))
+    }
+  }
+
+  test("upsertBatch: a one-partition input is written by one task, with no key shuffle") {
+    val b1 = Seq(("AAPL", "STOCK", 100.0, 1.0), ("BTC", "CRYPTO", 50000.0, -20.0))
+      .toDF("symbol", "asset_type", "price", "change")
+    val rows = Seq(
+      ("AAPL", "STOCK", 101.5, 1.5), ("AAPL", "OPTION", 9.0, 0.1),
+      ("ETH", "CRYPTO", 3000.0, 30.0), ("SOL", "CRYPTO", 150.0, 5.0))
+    // a shuffled result pinned by localCheckpoint, as a daemon's delta is:
+    // one partition, and a plan that reports no partitioning
+    val delta = rows.toDF("symbol", "asset_type", "price", "change").repartition(1).localCheckpoint()
+    assert(PlanBridge.internalRows(delta).getNumPartitions == 1)
+    def written(name: String, batch: DataFrame) = withTable(name) { t =>
+      JdbcUpsert.upsertBatch(b1, url, t, keyCols, valCols)
+      val ((jobs, _), plans) = plansOf(jobsOf(JdbcUpsert.upsertBatch(batch, url, t, keyCols, valCols)))
+      (readAll(t), jobs, plans)
+    }
+    val (one, jobs, plans) = written("market_one", delta)
+    assert(jobs == 1)
+    assert(plans.nonEmpty && exchanges(plans).isEmpty, plans.mkString("\n"))
+    // the same rows over three partitions take the key repartition
+    val (many, _, manyPlans) =
+      written("market_many", rows.toDF("symbol", "asset_type", "price", "change").repartition(3))
+    assert(keyShuffled(manyPlans))
+    assert(one == many)
+    assert(one == Set(("AAPL", "STOCK", 101.5, 1.5), ("BTC", "CRYPTO", 50000.0, -20.0)) ++ rows.tail)
+  }
+
+  test("upsertBatch: a multi-partition input holding one key in two partitions is repartitioned by key") {
+    withTable("market_split", primaryKey = false) { t =>
+      val schema = StructType(Seq("symbol", "asset_type").map(StructField(_, StringType)) ++
+        Seq("price", "change").map(StructField(_, DoubleType)))
+      // AAPL is the first row of the first partition and the last row of the second
+      val rows = Seq(Row("AAPL", "STOCK", 100.0, 1.0), Row("MSFT", "STOCK", 200.0, 2.0),
+        Row("BTC", "CRYPTO", 3.0, 3.0), Row("AAPL", "STOCK", 100.0, 1.0))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      assert(df.rdd.glom().collect().map(_.count(_.getString(0) == "AAPL")).toSeq == Seq(1, 1))
+      val (_, plans) = plansOf(JdbcUpsert.upsertBatch(df, url, t, keyCols, valCols))
+      assert(keyShuffled(plans), plans.mkString("\n"))
+      assert(readRows(t).sorted ==
+        Seq(("AAPL", "STOCK", 100.0, 1.0), ("BTC", "CRYPTO", 3.0, 3.0), ("MSFT", "STOCK", 200.0, 2.0)))
     }
   }
 

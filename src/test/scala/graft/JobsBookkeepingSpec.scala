@@ -164,7 +164,7 @@ class JobsBookkeepingSpec extends AnyFunSuite {
     val now = lit(Timestamp.valueOf("2025-01-02 00:00:00"))
     def upsert(store: DataFrame, delta: DataFrame, keys: Seq[String]) = Merge.upsert(
       store.withColumn("__src", lit(0)), delta.withColumn("updated_at", now).withColumn("__src", lit(1)),
-      keys, Seq(col("__src"), col("updated_at"))).drop("__src")
+      keys, ("__src" +: "updated_at" +: delta.columns.filterNot(keys.contains)).map(col)).drop("__src")
     def sameStore(got: DataFrame, want: DataFrame, what: String): Unit = {
       assert(got.schema == want.schema, s"$what store schema")
       assert(rowsOf(got) == rowsOf(want), s"$what store")
@@ -236,5 +236,43 @@ class JobsBookkeepingSpec extends AnyFunSuite {
         cached("stale_fallback"),
         s"case $seed index fallback")
     }
+  }
+
+  test("market and index jobs: two feed quotes for one key give one store, whatever the order, partitions or AQE") {
+    val now = lit(Timestamp.valueOf("2025-01-02 00:00:00"))
+    val str = (n: String) => StructField(n, StringType)
+    val quoteSchema = StructType(Seq(str("symbol"), str("asset_type")) ++
+      Seq("price", "percent_change", "change", "high", "low").map(StructField(_, DoubleType)))
+    // AAA is quoted twice with different values and requested twice
+    val quoteRows = Seq(
+      Row("AAA", "STOCK", 10.0, 1.0, 0.1, 11.0, 9.0),
+      Row("BBB", "CRYPTO", 5.0, 0.5, 0.05, 6.0, 4.0),
+      Row("AAA", "STOCK", 12.0, 1.0, 0.1, 13.0, 9.5))
+    val requests = spark.createDataFrame(
+      Seq(Row("AAA", "STOCK"), Row("BBB", "CRYPTO"), Row("AAA", "STOCK")).asJava,
+      StructType(Seq(str("symbol"), str("asset_type"))))
+    val store = spark.createDataFrame(Seq(Row("CCC", "STOCK", 1.0, 0.0, 0.0, 1.0, 1.0,
+      Timestamp.valueOf("2024-01-01 00:00:00"))).asJava, quoteSchema.add("updated_at", TimestampType))
+    val indexStore = store.select(col("symbol"), col("price"), col("change").as("price_change"),
+      col("percent_change"), col("high").as("price_high"), col("low").as("price_low"), col("updated_at"))
+    val stores = for {
+      rows <- Seq(quoteRows, quoteRows.reverse)
+      partitions <- Seq("1", "4", "7")
+      aqe <- Seq("true", "false")
+    } yield TestSpark.withConf(
+        "spark.sql.shuffle.partitions" -> partitions, "spark.sql.adaptive.enabled" -> aqe) {
+      // a distributed feed, one quote per partition
+      val quotes = spark.createDataFrame(spark.sparkContext.parallelize(rows, rows.size), quoteSchema)
+      val indexQuotes = quotes.select(col("symbol"), col("price").as("regularMarketPrice"),
+        col("change").as("regularMarketChange"), col("percent_change").as("regularMarketChangePercent"),
+        col("high").as("regularMarketDayHigh"), col("low").as("regularMarketDayLow"))
+      (rowsOf(Jobs.marketDataUpdate(requests, store, quotes, now).store),
+        rowsOf(Jobs.indexUpdate(requests.select("symbol"), indexStore, indexQuotes, now).store))
+    }
+    assert(stores.distinct.size == 1, stores.distinct.mkString("\n"))
+    val (market, index) = stores.head
+    assert(market.filter(_.startsWith("[AAA,")) ==
+      Seq("[AAA,STOCK,12.0,1.0,0.1,13.0,9.5,2025-01-02 00:00:00.0]"))
+    assert(index.filter(_.startsWith("[AAA,")) == Seq("[AAA,12.0,0.1,1.0,13.0,9.5,2025-01-02 00:00:00.0]"))
   }
 }

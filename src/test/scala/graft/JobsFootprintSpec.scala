@@ -1,17 +1,16 @@
 package graft
 
 import java.sql.{Date, Timestamp}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkFootprint.{jobsOf, plansOf}
 import graft.jobs.Jobs
 import graft.sources.JdbcUpsert
 import graft.streaming.Streaming
@@ -21,8 +20,9 @@ import graft.streaming.Streaming
   * JDBC → job → completion payload → upsert of the job's store → per-batch
   * payloads, against an in-memory Derby store.
   *
-  * It pins the Spark jobs each shape runs, and that the completion and
-  * per-batch relations are local: publishing them runs no Spark job.
+  * It pins the Spark jobs each shape runs, that no plan of the block
+  * broadcasts, and that the completion and per-batch relations are local:
+  * publishing them runs no Spark job.
   */
 class JobsFootprintSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -138,23 +138,6 @@ class JobsFootprintSpec extends AnyFunSuite {
       ("index_new", IndexTable, newRead, newJob))
   }
 
-  private lazy val jobsStarted = {
-    val n = new AtomicInteger()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    })
-    n
-  }
-
-  /** Spark jobs started by `body`. */
-  private def jobsOf[A](body: => A): (Int, A) = {
-    TestListenerBus.drain(spark.sparkContext)
-    val before = jobsStarted.get()
-    val out = body
-    TestListenerBus.drain(spark.sparkContext)
-    (jobsStarted.get() - before, out)
-  }
-
   /** One request of each shape; per shape, the jobs of the whole request,
     * the jobs of its payload collects, and its payload strings.
     */
@@ -179,14 +162,23 @@ class JobsFootprintSpec extends AnyFunSuite {
   }
 
   test("each request shape runs a bounded number of Spark jobs; publishing its payloads runs none") {
-    val block = runBlock()
+    val (block, plans) = plansOf(runBlock())
     val jobs = block.map(b => b._1 -> b._2).toMap
     info(s"Spark jobs per shape: $jobs")
     assert(block.forall(_._3 == 0), s"payload collects ran Spark jobs: ${block.map(b => b._1 -> b._3)}")
-    // the jobs of the JDBC read and of the upsert included; each fetch and
-    // store probe is one broadcast semi-join or join (two jobs each)
-    val bounds = Map("market" -> 8, "historical" -> 10, "historical_wide" -> 10, "index_cached" -> 4, "index_new" -> 7)
+    // the jobs of the JDBC read and of the upsert included; each store probe
+    // and fetch is one filter by an InSet of the request's keys (one job),
+    // the historical counts are one job, and the upsert of a job's store
+    // (an adaptive window plan) is a shuffle and a write
+    val bounds =
+      Map("market" -> 6, "historical" -> 7, "historical_wide" -> 6, "index_cached" -> 3, "index_new" -> 5)
     assert(jobs.forall { case (shape, n) => n <= bounds(shape) }, s"jobs $jobs over bounds $bounds")
+    // no request-bounded relation is broadcast: broadcasting a local
+    // relation is a Spark job of its own
+    val broadcasts =
+      plans.filter(SparkFootprint.collectWithSubqueries(_) { case b: BroadcastExchangeExec => b }.nonEmpty)
+    assert(plans.nonEmpty)
+    assert(broadcasts.isEmpty, s"plans that broadcast:\n${broadcasts.mkString("\n")}")
     val payloads = block.map(b => b._1 -> b._4).toMap
     assert(payloads("market").head.contains("\"record_count\":1,\"total_batches\":1,\"total_assets\":1"))
     assert(payloads("index_cached").head ==

@@ -1,16 +1,13 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkFootprint.jobCount
 import graft.ops.{Caching, SimilarityOps}
 
 /** The driver-held Lloyd fit (`SimilarityOps.lloyd` / `pqLloyd`) against
@@ -183,31 +180,15 @@ class LloydSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  private lazy val jobsStarted = {
-    val n = new AtomicInteger()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    })
-    n
-  }
-
-  private def jobsOf(body: => Unit): Int = {
-    TestListenerBus.drain(spark.sparkContext)
-    val before = jobsStarted.get()
-    body
-    TestListenerBus.drain(spark.sparkContext)
-    jobsStarted.get() - before
-  }
-
   test("a fit runs one job to seed, which also caches its input, and one per round") {
     for (iters <- Seq(1, 3)) {
       // a fresh corpus per fit, so its cache is built inside the count
       val rows = corpus(30L + iters, 200, 8, 1000, 0.0, ragged = false)
-      val flatJobs = jobsOf(Caching.withCached {
+      val flatJobs = jobCount(Caching.withCached {
         SimilarityOps.kmeansCentroids(embeddings(rows), "id", "emb", 8, iters).collect()
       })
       assert(flatJobs == 1 + iters, s"kmeansCentroids, iters $iters")
-      val pqJobs = jobsOf(Caching.withCached {
+      val pqJobs = jobCount(Caching.withCached {
         SimilarityOps.pqTrain(embeddings(rows), "id", "emb", dim = 8, m = 4, kSub = 4, iters).collect()
       })
       assert(pqJobs == 1 + iters, s"pqTrain, iters $iters")

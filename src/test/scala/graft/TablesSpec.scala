@@ -1,13 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkFootprint.jobCount
+import graft.TestSpark.withConf
 
 /** Pins the schema-adaptive events normalization: the driver has shipped
   * events.parquet in two layouts across regenerations (int64 nanosecond
@@ -115,33 +115,11 @@ class TablesSpec extends AnyFunSuite {
         manual.select("event_id").collect().map(_.getLong(0)).toSet)
   }
 
-  private lazy val jobsStarted: AtomicInteger = {
-    val n = new AtomicInteger()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    })
-    n
-  }
-
-  private def jobsOf(body: => Unit): Int = {
-    TestListenerBus.drain(spark.sparkContext)
-    val before = jobsStarted.get()
-    body
-    TestListenerBus.drain(spark.sparkContext)
-    jobsStarted.get() - before
-  }
-
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   test("schema memo: a repeated read of a table starts no Spark job") {
     val dir = Files.createTempDirectory("graft-tables").toString
     Seq((1L, "a")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    assert(jobsOf(Tables.documents(spark, dir)) >= 1, "the first read infers the schema")
-    assert(jobsOf(Tables.documents(spark, dir)) == 0, "the second read infers it again")
+    assert(jobCount(Tables.documents(spark, dir)) >= 1, "the first read infers the schema")
+    assert(jobCount(Tables.documents(spark, dir)) == 0, "the second read infers it again")
     assert(Tables.documents(spark, dir).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
   }
 
@@ -175,17 +153,17 @@ class TablesSpec extends AnyFunSuite {
     def batchTsType(): Either[String, DataType] =
       scala.util.Try(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType)
         .toEither.left.map(_.getClass.getName)
-    for (flag <- Seq("true", "false", "true")) withConf(key, flag) {
+    for (flag <- Seq("true", "false", "true")) withConf(key -> flag) {
       assert(scala.util.Try(tsType()).toEither.left.map(_.getClass.getName) == batchTsType(),
         s"nanosAsLong=$flag")
     }
-    assert(withConf(key, "true")(tsType()) == LongType)
-    assert(withConf(key, "true")(Tables(spark, dir, "events").as[(Long, Long)].head()) ==
+    assert(withConf(key -> "true")(tsType()) == LongType)
+    assert(withConf(key -> "true")(Tables(spark, dir, "events").as[(Long, Long)].head()) ==
       (1L, 1705276800000000001L))
   }
 
   test("schema memo: every sf0.001 table's memoized schema is the inferred one") {
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       for (t <- Tables.names) {
         val path = s"${TestSpark.sf0001}/$t.parquet"
         val inferred = spark.read.parquet(path).schema

@@ -17,15 +17,18 @@ object TestSpark {
     */
   def onBothPaths(body: => Unit): Unit =
     Seq(
-      Map("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
-      Map("spark.sql.optimizer.excludedRules" ->
+      Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+      Seq("spark.sql.optimizer.excludedRules" ->
           "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
         "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
-    ).foreach { conf =>
-      val prev = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      try {
-        conf.foreach { case (k, v) => spark.conf.set(k, v) }
-        body
-      } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
+    ).foreach(conf => withConf(conf: _*)(body))
+
+  /** `body` with the session's `conf` set, restored after. */
+  def withConf[A](conf: (String, String)*)(body: => A): A = {
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }
